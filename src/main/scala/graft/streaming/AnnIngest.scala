@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.AnnIndex
+import graft.util.LocalFs
 
 /** Streaming half of the amortized ANN-index story: curated documents
   * flow straight into a persisted [[graft.extra.AnnIndex]] as they
@@ -106,20 +107,12 @@ object AnnIngest {
     val codebooks = AnnIndex.readCodebooks(curated.sparkSession, indexDir)
     val streamId = streamIdOf("ann", checkpointDir)
     // ASYNC tier folding (r17, VERDICT r16 #6 — the max_batch spike was
-    // the batch that drew the tier merge): the heavy half of the fold
-    // (read the tier + rewrite one tier-up segment, invisible until
-    // committed) runs on a daemon thread CONCURRENTLY with later
-    // micro-batches — guide §2.6, overlap independent jobs — and the
-    // batch thread only pays the cheap manifest swap
-    // ([[AnnIndex.commitPreparedTier]]) once the merge is ready. The
-    // manifest writer stays single-threaded (the batch thread), so the
-    // put-if-absent commit never races; a pending fold dropped at
-    // stream end leaves only orphan files for compact/vacuum to sweep.
-    val foldPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-      r => { val t = new Thread(r, "ann-tier-fold"); t.setDaemon(true); t })
-    val pendingFold = new java.util.concurrent.atomic.AtomicReference[
-      java.util.concurrent.Future[Option[AnnIndex.PreparedTier]]]()
-    curated
+    // the batch that drew the tier merge; guide §2.6, overlap
+    // independent jobs): see [[TierFolder]]
+    val folder = new TierFolder[AnnIndex.PreparedTier]("ann",
+      curated.sparkSession)
+    LocalFs.install(curated.sparkSession)
+    folder.boundTo(curated
       .select(col(idCol), embedStub(col(textCol), dim).as("embedding"))
       .writeStream
       .outputMode("append")
@@ -133,28 +126,18 @@ object AnnIngest {
         // the file count is one per touched list either way
         if (sinkGate()) {
           val spark = df.sparkSession
-          val f = pendingFold.get()
-          if (f != null && f.isDone) {
-            pendingFold.set(null)
-            // harvest a finished background merge first: one manifest
-            // write; a failed prepare is dropped (orphan files only)
-            try f.get().foreach(p =>
-              AnnIndex.commitPreparedTier(spark, indexDir, p): Unit)
-            catch { case _: java.util.concurrent.ExecutionException => () }
-          }
+          // harvest a finished background merge first: one manifest write
+          folder.harvest(p =>
+            AnnIndex.commitPreparedTier(spark, indexDir, p): Unit)
           AnnIndex.appendIvfPq(spark, indexDir, df, idCol,
             "embedding", codebooks = Some(codebooks),
             txn = Some((streamId, batchId)), autoCompactFanout = 0)
-          if (autoCompactFanout > 0 && pendingFold.get() == null)
-            pendingFold.set(foldPool.submit(
-              new java.util.concurrent.Callable[Option[AnnIndex.PreparedTier]] {
-                def call(): Option[AnnIndex.PreparedTier] =
-                  AnnIndex.prepareCompactTier(spark, indexDir,
-                    autoCompactFanout)
-              }))
+          if (autoCompactFanout > 0)
+            folder.submitIfIdle(AnnIndex.prepareCompactTier(spark,
+              indexDir, autoCompactFanout))
         }
       }
-      .start()
+      .start())
   }
 
   /** Stable ledger identity for a stream: the checkpoint location IS
@@ -196,6 +179,7 @@ object AnnIngest {
       sinkGate: () => Boolean = () => true,
       autoCompactFanout: Int = 8): StreamingQuery = {
     val streamId = streamIdOf("bm25", checkpointDir)
+    LocalFs.install(curated.sparkSession)
     curated
       .select(col(idCol), col(textCol))
       .writeStream

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.Merge
+import graft.util.LocalFs
 
 /** Streaming half of the corpus-maintenance story
   * ([[graft.extra.Merge]]): a CDC-style change stream — rows carrying a
@@ -46,7 +47,8 @@ object MergeStream {
   def start(changes: DataFrame, tableDir: String, checkpointDir: String,
       key: String, versionCol: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      sinkGate: () => Boolean = () => true): StreamingQuery =
+      sinkGate: () => Boolean = () => true): StreamingQuery = {
+    LocalFs.install(changes.sparkSession)
     changes.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -57,4 +59,5 @@ object MergeStream {
             versionCol): Unit
       }
       .start()
+  }
 }

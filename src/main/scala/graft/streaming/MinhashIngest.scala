@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.{IndexManifests, MinhashIndex}
+import graft.util.LocalFs
 
 /** STREAMING incremental near-dup ingest — the crawl-pipeline shape of
   * [[graft.extra.MinhashIndex]], mirroring [[SubstrIngest]]: each
@@ -78,6 +79,7 @@ object MinhashIngest {
       sinkGate: () => Boolean = () => true,
       autoCompactFanout: Int = 8): StreamingQuery = {
     val streamId = AnnIngest.streamIdOf("minhash", checkpointDir)
+    LocalFs.install(curated.sparkSession)
     curated
       .select(col(idCol), col(textCol))
       .writeStream

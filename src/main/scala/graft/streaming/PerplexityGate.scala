@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.KnLm
+import graft.util.LocalFs
 
 /** STREAMING perplexity gate — the online half of the CCNet LM filter:
   * a FROZEN [[KnLm]] model (fitted offline on the curated corpus,
@@ -62,6 +63,7 @@ object PerplexityGate {
       maxCrossEntropy: Double = Double.MaxValue,
       trigger: Trigger = Trigger.AvailableNow(),
       sinkGate: () => Boolean = () => true): StreamingQuery = {
+    LocalFs.install(docs.sparkSession)
     docs
       .writeStream
       .outputMode("append")

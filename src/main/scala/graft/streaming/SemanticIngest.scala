@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.{IndexManifests, SemanticIndex}
+import graft.util.LocalFs
 
 /** STREAMING semantic dedup — the online SemDeDup leg, closing the
   * incremental-ingest family ([[MinhashIngest]] lexical near-dup,
@@ -77,6 +78,7 @@ object SemanticIngest {
       sinkGate: () => Boolean = () => true,
       autoCompactFanout: Int = 8): StreamingQuery = {
     val streamId = AnnIngest.streamIdOf("semantic", checkpointDir)
+    LocalFs.install(embedded.sparkSession)
     embedded
       .select(col(idCol), col(vecCol))
       .writeStream

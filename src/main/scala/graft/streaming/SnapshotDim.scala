@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.Snapshots
+import graft.util.LocalFs
 
 /** Slowly-changing-dimension enrichment against a snapshot table
   * ([[Snapshots]]): the stream joins each micro-batch with the dim's
@@ -33,7 +34,8 @@ object SnapshotDim {
   def start(rows: DataFrame, snapDir: String, keys: Seq[String],
       checkpointDir: String, sink: DataFrame => Unit,
       joinType: String = "left",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    LocalFs.install(rows.sparkSession)
     rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -42,4 +44,5 @@ object SnapshotDim {
         sink(enrich(df, snapDir, keys, joinType))
       }
       .start()
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.Snapshots
+import graft.util.LocalFs
 
 /** Streaming CDC into a SNAPSHOT-VERSIONED table — [[MergeStream]]'s
   * semantics lifted onto the manifest layer, which upgrades both of
@@ -52,6 +53,7 @@ object SnapshotStream {
       appId: Option[String] = None,
       sinkGate: () => Boolean = () => true): StreamingQuery = {
     val app = appId.getOrElse(checkpointDir)
+    LocalFs.install(changes.sparkSession)
     changes.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.{IndexManifests, SubstrIndex}
+import graft.util.LocalFs
 
 /** STREAMING incremental ExactSubstr — the crawl-pipeline shape of
   * [[graft.extra.SubstrIndex]]: each curated micro-batch is
@@ -137,8 +138,9 @@ object SubstrIngest {
     * cheap manifest swap once the merge is ready, so a fold no longer
     * stalls the batch that happened to trigger it (the substr block's
     * max-batch spike). The manifest writer stays single-threaded (the
-    * batch thread); a pending fold dropped at stream end leaves only
-    * orphan files for compact/vacuum to sweep.
+    * batch thread); the fold thread ([[TierFolder]]) stops with the
+    * query, and a fold it drops leaves only orphan files for
+    * compact/vacuum to sweep.
     */
   def start(curated: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id",
@@ -147,11 +149,10 @@ object SubstrIngest {
       sinkGate: () => Boolean = () => true,
       autoCompactFanout: Int = 8): StreamingQuery = {
     val streamId = AnnIngest.streamIdOf("substr", checkpointDir)
-    val foldPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-      r => { val t = new Thread(r, "substr-tier-fold"); t.setDaemon(true); t })
-    val pendingFold = new java.util.concurrent.atomic.AtomicReference[
-      java.util.concurrent.Future[Option[SubstrIndex.PreparedTier]]]()
-    curated
+    val folder = new TierFolder[SubstrIndex.PreparedTier]("substr",
+      curated.sparkSession)
+    LocalFs.install(curated.sparkSession)
+    folder.boundTo(curated
       .select(col(idCol), col(textCol))
       .writeStream
       .outputMode("append")
@@ -160,28 +161,17 @@ object SubstrIngest {
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         if (sinkGate()) {
           val spark = df.sparkSession
-          val f = pendingFold.get()
-          if (f != null && f.isDone) {
-            pendingFold.set(null)
-            // harvest a finished background merge first: one manifest
-            // write; a failed prepare is dropped (orphan files only)
-            try f.get().foreach(p =>
-              SubstrIndex.commitPreparedTier(spark, indexDir, p): Unit)
-            catch { case _: java.util.concurrent.ExecutionException => () }
-          }
+          // harvest a finished background merge first: one manifest write
+          folder.harvest(p =>
+            SubstrIndex.commitPreparedTier(spark, indexDir, p): Unit)
           applyBatch(spark, indexDir, outDir, df, idCol,
             textCol, streamId, batchId, minSpanTokens,
             autoCompactFanout = 0): Unit
-          if (autoCompactFanout > 0 && pendingFold.get() == null)
-            pendingFold.set(foldPool.submit(
-              new java.util.concurrent.Callable[
-                  Option[SubstrIndex.PreparedTier]] {
-                def call(): Option[SubstrIndex.PreparedTier] =
-                  SubstrIndex.prepareCompactTier(spark, indexDir,
-                    autoCompactFanout)
-              }))
+          if (autoCompactFanout > 0)
+            folder.submitIfIdle(SubstrIndex.prepareCompactTier(spark,
+              indexDir, autoCompactFanout))
         }
       }
-      .start()
+      .start())
   }
 }

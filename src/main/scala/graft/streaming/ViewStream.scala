@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.IncrementalAgg
 import graft.extra.IncrementalAgg.ViewSpec
+import graft.util.LocalFs
 
 /** Streaming maintenance of an [[IncrementalAgg]] materialized view:
   * each micro-batch of RAW rows is folded into the stored partial-agg
@@ -59,7 +60,8 @@ object ViewStream {
   def start(rows: DataFrame, viewDir: String, checkpointDir: String,
       spec: ViewSpec, numFiles: Int = 8,
       trigger: Trigger = Trigger.AvailableNow(),
-      sinkGate: () => Boolean = () => true): StreamingQuery =
+      sinkGate: () => Boolean = () => true): StreamingQuery = {
+    LocalFs.install(rows.sparkSession)
     rows.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -69,4 +71,5 @@ object ViewStream {
           applyBatch(df, viewDir, spec, batchId, numFiles): Unit
       }
       .start()
+  }
 }

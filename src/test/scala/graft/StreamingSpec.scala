@@ -1,14 +1,17 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.gen.TickGen
 import graft.ops.{Features, TickParse}
-import graft.streaming.{MemoryTickSource, RateTickSource, StreamingPipeline}
+import graft.streaming.{FileTickSource, MemoryTickSource, RateTickSource,
+  StreamingPipeline}
 import graft.streaming.StreamingPipeline.Config
+import graft.util.LocalFs
 
 /** Streaming semantics (SURVEY.md §5.3): window assignment, out-of-order
   * replay, watermark late-drop, update-mode re-emission + finalization,
@@ -186,6 +189,89 @@ class StreamingSpec extends SparkSpec {
       trigger = Trigger.ProcessingTime(0))
     q2.processAllAvailable(); q2.stop()
     assert(spark.read.parquet(out).count() == n1)
+  }
+
+  test("checkpoint I/O starts no process: no chmod/readlink fork names " +
+      "the checkpoint over 3+ micro-batches") {
+    val out = tmp("out"); val ckpt = tmp("ckpt")
+    val src = new MemoryTickSource(spark)
+    val (batches, forks) = Forks.during {
+      val q = StreamingPipeline.start(spark, src,
+        cfg.copy(checkpointDir = ckpt, outDir = out),
+        trigger = Trigger.ProcessingTime(0))
+      try {
+        for (i <- 0 until 3) {
+          src.addData(Seq(payload("AAPL", 100.0 + i, 61000L + 1000L * i),
+            payload("MSFT", 400.0 + i, 62000L + 1000L * i)))
+          q.processAllAvailable()
+        }
+        q.recentProgress.count(_.numInputRows > 0)
+      } finally q.stop()
+    }
+    assert(batches >= 3)
+    val ckptName = Paths.get(ckpt).getFileName.toString
+    val named = forks.filter(_.contains(ckptName))
+    assert(named.size == 0,
+      s"processes named the checkpoint, e.g. ${named.take(3)}")
+  }
+
+  /** Write a checkpoint under `first`, restart it under `second`: the
+    * offsets, commits and state written by one `file:` binding must
+    * carry the other through to the same finalized features.
+    */
+  private def restartAcross(first: SparkSession,
+      second: SparkSession): Unit = {
+    val in = tmp("in"); val out = tmp("out"); val ckpt = tmp("ckpt")
+    val c = cfg.copy(checkpointDir = ckpt, outDir = out)
+    val files = Seq(
+      Seq(payload("AAPL", 100.0, 61000L), payload("MSFT", 400.0, 65000L)),
+      Seq(payload("AAPL", 101.0, 70000L)),
+      Seq(payload("AAPL", 99.0, 119000L), payload("MSFT", 401.0, 125000L)))
+    def drop(i: Int): Unit = Files.write(Paths.get(in, s"ticks-$i.json"),
+      files(i).map(p =>
+        "{\"value\":\"" + p.replace("\"", "\\\"") + "\"}").mkString("\n")
+        .getBytes("UTF-8")): Unit
+    def run(s: SparkSession): Unit = {
+      val q = StreamingPipeline.start(s, new FileTickSource(in), c,
+        trigger = Trigger.ProcessingTime(0))
+      try q.processAllAvailable() finally q.stop()
+    }
+    def sink = spark.read.parquet(out)
+    drop(0); drop(1); run(first)
+    val firstRows = sink.count()
+    val lastBatch = sink.agg(max("batch_id")).head().getLong(0)
+    drop(2); run(second)
+    // the second run resumed: batch ids continue, nothing replayed
+    assert(sink.filter(col("batch_id") <= lastBatch).count() == firstRows)
+    assert(sink.count() > firstRows)
+    val cols = Seq("symbol", "window_start", "first_price", "last_price",
+      "num_ticks").map(col)
+    val streamed = StreamingPipeline.finalized(spark, out).select(cols: _*)
+      .orderBy("symbol", "window_start").collect().toSeq
+    val batch = Features.compute(
+      TickParse.parseRaw(files.flatten.toDF("value")),
+      StreamingPipeline.featureConfig(cfg)).select(cols: _*)
+      .orderBy("symbol", "window_start").collect().toSeq
+    assert(streamed == batch)
+  }
+
+  private def stockSession(): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set(LocalFs.Key, "org.apache.hadoop.fs.local.LocalFs")
+    s
+  }
+
+  test("a checkpoint written with the fork-free binding restarts under " +
+      "stock LocalFs") {
+    val stock = stockSession()
+    restartAcross(spark, stock)
+    assert(stock.conf.get(LocalFs.Key) == "org.apache.hadoop.fs.local.LocalFs")
+    assert(spark.conf.get(LocalFs.Key) == classOf[LocalFs].getName)
+  }
+
+  test("a checkpoint written under stock LocalFs restarts with the " +
+      "fork-free binding") {
+    restartAcross(stockSession(), spark)
   }
 
   test("GBM generator is deterministic under a seed") {

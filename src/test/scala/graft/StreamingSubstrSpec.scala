@@ -136,4 +136,31 @@ class StreamingSubstrSpec extends SparkSpec {
       minSpanTokens = 0))
     assert(graft.extra.IndexManifests.latest(spark, idx).get._1 == v + 1)
   }
+
+  test("the background tier-fold thread does not outlive q.stop()") {
+    import scala.jdk.CollectionConverters._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    def foldThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-") &&
+        t.getName.endsWith("-tier-fold"))
+    // folds of earlier queries are already shutting down
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(foldThreads.isEmpty, foldThreads)
+    }
+    val idx = tmp("substr_fold_idx")
+    SubstrIndex.build(corpus, "doc_id", "text", idx, k = 5)
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = SubstrIngest.start(mem.toDF().toDF("doc_id", "text"), idx,
+      tmp("substr_fold_out"), tmp("substr_fold_ckpt"),
+      trigger = Trigger.ProcessingTime(0), autoCompactFanout = 2)
+    try {
+      for (b <- Seq(b1, b2)) { mem.addData(b: _*); q.processAllAvailable() }
+      assert(foldThreads.map(_.getName) == Seq("graft-substr-tier-fold"))
+    } finally q.stop()
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(foldThreads.isEmpty, foldThreads)
+    }
+  }
 }
