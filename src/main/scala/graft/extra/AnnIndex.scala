@@ -3,6 +3,8 @@ package graft.extra
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.ParquetRead
+
 /** Persisted ANN index — the amortized 100 TB shape: the expensive
   * per-row build (coarse list assignment + PQ code assignment) is paid
   * ONCE and written to storage; every query batch afterwards reads
@@ -114,13 +116,13 @@ object AnnIndex {
     // call paid two Spark jobs re-collecting bytes that cannot have
     // changed.
     IndexManifests.cachedSideFile(spark, s"$dir/meta") {
-      val meta = spark.read.parquet(s"$dir/meta").head()
+      val meta = ParquetRead.read(spark, s"$dir/meta").head()
       val (m, sub) = (meta.getAs[Int]("m"), meta.getAs[Int]("sub"))
       // indexes written before residual encoding existed have no flag —
       // they are raw-vector indexes by construction
       val residual = meta.schema.fieldNames.contains("residual") &&
         meta.getAs[Boolean]("residual")
-      val cbRows = spark.read.parquet(s"$dir/codebooks")
+      val cbRows = ParquetRead.read(spark, s"$dir/codebooks")
         .select("kind", "pos", "cid", "v", "nrm").collect()
         .map { r =>
           (r.getString(0), r.getInt(1), Similarity.Centroid(r.getLong(2),
@@ -177,7 +179,7 @@ object AnnIndex {
       : org.apache.spark.sql.DataFrame = {
     val segs = entries.getOrElse("codes", Nil)
     require(segs.nonEmpty, s"no committed codes segments at $dir")
-    segs.map(rel => spark.read.parquet(s"$dir/$rel"))
+    segs.map(rel => ParquetRead.read(spark, s"$dir/$rel"))
       .reduce(_.unionByName(_))
       .withColumn("list_id", col("list_id").cast("long"))
   }
@@ -379,7 +381,7 @@ object AnnIndex {
     val picked = IndexManifests.pickTier(sizes, fanout)
     if (picked.isEmpty) return None
     val seg = f"codes/tier-$v0%09d"
-    picked.map(rel => spark.read.parquet(s"$dir/$rel"))
+    picked.map(rel => ParquetRead.read(spark, s"$dir/$rel"))
       .reduce(_.unionByName(_))
       .repartition(col("list_id"))
       .sortWithinPartitions(col("list_id"), col("id"))
@@ -414,7 +416,7 @@ object AnnIndex {
       entries: Map[String, Seq[String]])
       : Option[org.apache.spark.sql.DataFrame] = {
     val paths = entries.getOrElse("tombstones", Nil).map(r => s"$dir/$r")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
   }
 
   /** Delete vectors from the index — the dense mirror of

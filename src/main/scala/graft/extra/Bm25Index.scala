@@ -6,6 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.ParquetRead
+
 /** Persisted BM25 index — the sparse-retrieval mirror of [[AnnIndex]]:
   * the expensive per-corpus work (tokenize + explode + three keyed
   * aggregations) is paid ONCE at build time and written to storage;
@@ -105,7 +107,7 @@ object Bm25Index {
       entries: Map[String, Seq[String]], frame: String)
       : Option[DataFrame] = {
     val paths = entries.getOrElse(frame, Nil).map(rel => s"$dir/$rel")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
   }
 
   /** [[readFrame]] with MANIFEST-RANGE file pruning (the r15
@@ -128,7 +130,7 @@ object Bm25Index {
     if (segs.isEmpty) return None
     val complete = terms.filter(_.size <= 10000)
     if (complete.isEmpty)
-      return Some(spark.read.parquet(segs.map(s => s"$dir/$s"): _*))
+      return Some(ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*))
     val sorted = complete.get.sorted.toIndexedSeq
     def anyTermIn(mn: String, mx: String): Boolean = {
       // first term >= mn, then check it is <= mx
@@ -154,12 +156,12 @@ object Bm25Index {
       case (f, (mn, mx)) if anyTermIn(mn, mx) => s"$dir/$f"
     }
     val paths = kept ++ legacy
-    if (paths.nonEmpty) Some(spark.read.parquet(paths: _*))
+    if (paths.nonEmpty) Some(ParquetRead.read(spark, paths: _*))
     else {
       // every file pruned: schema-preserving empty frame (one footer
       // open for the schema; no data read)
       val any = s"$dir/${segs.head}"
-      Some(spark.read.parquet(any).filter(lit(false)))
+      Some(ParquetRead.read(spark, any).filter(lit(false)))
     }
   }
 
@@ -340,10 +342,10 @@ object Bm25Index {
     def readPicked(frame: String): Option[DataFrame] = {
       val p = pickedOf(frame)
       if (p.isEmpty) None
-      else Some(spark.read.parquet(p.map(s => s"$dir/$s"): _*))
+      else Some(ParquetRead.read(spark, p.map(s => s"$dir/$s"): _*))
     }
     Layout.writeClustered(
-      spark.read.parquet(pickedTf.map(s => s"$dir/$s"): _*),
+      ParquetRead.read(spark, pickedTf.map(s => s"$dir/$s"): _*),
       s"$dir/tf/$seg", Seq(col("term"), col("id")), nf)
     readPicked("dl").foreach(d => Layout.writeClustered(d,
       s"$dir/dl/$seg", Seq(col("id")), math.max(1, nf / 4)))

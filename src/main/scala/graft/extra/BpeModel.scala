@@ -3,6 +3,8 @@ package graft.extra
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
+import graft.util.ParquetRead
+
 /** Persisted BPE tokenizer model — the trained merge list under the
   * shared [[IndexManifests]] layer, completing the model-registry story
   * for the third trained artifact (NB classifier model, ANN codebooks,
@@ -82,7 +84,7 @@ object BpeModel {
       val segs = entries.getOrElse("merges", Seq.empty)
       require(segs.nonEmpty,
         s"persisted BPE model at $dir v$version has no 'merges' frame")
-      segs.map(s => spark.read.parquet(s"$dir/$s"))
+      segs.map(s => ParquetRead.read(spark, s"$dir/$s"))
         .reduce(_ unionByName _)
         .orderBy("rank")
         .collect()

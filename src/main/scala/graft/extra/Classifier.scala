@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.ParquetRead
+
 /** Model-based document classification — the trained-filter stage of a
   * curation pipeline (CCNet / GPT-3 / FineWeb all gate their corpora
   * with a lightweight classifier trained on seed labels; reference
@@ -343,7 +345,7 @@ object Classifier {
         require(segs.nonEmpty,
           s"persisted NB model at $dir v$version has no '$name' frame")
         Dedup.materialize(
-          segs.map(s => spark.read.parquet(s"$dir/$s"))
+          segs.map(s => ParquetRead.read(spark, s"$dir/$s"))
             .reduce(_ unionByName _))
       }
       NaiveBayesModel(frame("class_stats"), frame("token_lp"))

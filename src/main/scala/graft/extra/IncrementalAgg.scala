@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.ParquetRead
+
 /** Incrementally-maintained materialized aggregate — the "don't re-scan
   * 100 TB to refresh a dashboard" operator. The view is stored as
   * ALGEBRAIC partial-aggregate state per grain key (count / sum / min /
@@ -190,7 +192,7 @@ object IncrementalAgg {
 
   /** The stored state, as written (one row per grain). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    ParquetRead.read(spark, dir)
 
   /** Serving projection: grain + cnt + sums/mins/maxes as stored, HLL
     * sketches finalized to estimates (`ndv_c`), plus exact decimal

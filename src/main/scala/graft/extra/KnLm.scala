@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.ParquetRead
+
 /** SERVABLE Kneser–Ney trigram LM — the KenLM artifact split that
   * [[Text.kneserNeyScore]]'s self-scoring form deliberately fuses:
   * `fit` trains the model ONCE (five statistic frames — the ARPA-file
@@ -430,7 +432,7 @@ object KnLm {
         require(segs.nonEmpty,
           s"persisted KN LM at $dir v$version has no '$name' frame")
         Dedup.materialize(
-          segs.map(s => spark.read.parquet(s"$dir/$s"))
+          segs.map(s => ParquetRead.read(spark, s"$dir/$s"))
             .reduce(_ unionByName _))
       }
       val meta = frame("meta").head()

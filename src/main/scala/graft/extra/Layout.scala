@@ -2,6 +2,8 @@ package graft.extra
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
+import graft.util.ParquetRead
+
 /** Storage-layout operators — the table-maintenance half of running this
   * engine against a large corpus:
   *
@@ -116,12 +118,12 @@ object Layout {
     require(new org.apache.hadoop.fs.Path(srcDir) !=
       new org.apache.hadoop.fs.Path(dstDir),
       "compact cannot write onto its own input; use a staging dir + rename")
-    val df = spark.read.parquet(srcDir)
+    val df = ParquetRead.read(spark, srcDir)
     val before = df.inputFiles.length
     val n = math.max(1L,
       (dataBytes(spark, srcDir) + targetFileBytes - 1) / targetFileBytes)
     df.repartition(n.toInt).write.mode(SaveMode.Overwrite).parquet(dstDir)
-    val after = spark.read.parquet(dstDir).inputFiles.length
+    val after = ParquetRead.read(spark, dstDir).inputFiles.length
     (before, after)
   }
 }

@@ -10,6 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
+import graft.util.ParquetRead
+
 /** Keyed copy-on-write MERGE (upsert / delete) over a clustered parquet
   * layout — the incremental-refresh half of table maintenance that
   * [[Layout.writeClustered]] / [[Layout.compact]] leave open. A training
@@ -141,7 +143,7 @@ object Merge {
     */
   def upsert(spark: SparkSession, dir: String, updates: DataFrame,
       key: String): MergeStats = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = ParquetRead.read(spark, dir).schema
     require(schema.fieldNames.sameElements(updates.schema.fieldNames),
       s"updates schema ${updates.schema.fieldNames.mkString(",")} does not " +
         s"match table schema ${schema.fieldNames.mkString(",")}")
@@ -164,7 +166,7 @@ object Merge {
     */
   def delete(spark: SparkSession, dir: String, keys: DataFrame,
       key: String): MergeStats = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = ParquetRead.read(spark, dir).schema
     require(keys.schema.fieldNames.contains(key),
       s"keys frame has no $key column")
     val n = keys.select(key).distinct().count()
@@ -194,7 +196,7 @@ object Merge {
     */
   def upsertVersioned(spark: SparkSession, dir: String, updates: DataFrame,
       key: String, versionCol: String): MergeStats = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = ParquetRead.read(spark, dir).schema
     require(schema.fieldNames.sameElements(updates.schema.fieldNames),
       s"updates schema ${updates.schema.fieldNames.mkString(",")} does " +
         s"not match table schema ${schema.fieldNames.mkString(",")}")
@@ -268,7 +270,7 @@ object Merge {
   def mergeKeyed(spark: SparkSession, dir: String, batch: DataFrame,
       key: String)(combine: (DataFrame, DataFrame) => DataFrame)
       : MergeStats = {
-    val schema = spark.read.parquet(dir).schema
+    val schema = ParquetRead.read(spark, dir).schema
     val tbl = schema.fields.map(f => (f.name, f.dataType)).toSeq
     val bat = batch.schema.fields.map(f => (f.name, f.dataType)).toSeq
     require(tbl == bat,
@@ -384,7 +386,7 @@ object Merge {
     // row count from the staged footers — metadata only, no second
     // compute of the anti-join ∪ insert plan (a pre-write .count()
     // would run the whole rewrite twice)
-    val rows = spark.read.parquet(staging.toString).count()
+    val rows = ParquetRead.read(spark, staging.toString).count()
 
     // commit: move staged files in (UUID names — no collisions), then
     // delete replaced files last (crash ⇒ duplicates, never loss)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.util.ParquetRead
+
 /** Persisted MinHash-LSH band index — the NEAR-DUP mirror of
   * [[SubstrIndex]], completing the amortized-ingest story for every
   * incremental dedup family: the standing corpus' (band, signature)
@@ -59,7 +61,7 @@ object MinhashIndex {
     */
   def meta(spark: SparkSession, dir: String): (Int, Int, Int) =
     IndexManifests.cachedSideFile(spark, s"$dir/meta") {
-      val r = spark.read.parquet(s"$dir/meta").head()
+      val r = ParquetRead.read(spark, s"$dir/meta").head()
       (r.getAs[Int]("num_perms"), r.getAs[Int]("rows_per_band"),
         r.getAs[Int]("shingle_n"))
     }
@@ -223,7 +225,7 @@ object MinhashIndex {
     val segB = f"bands/seg-${v0 + 1}%09d"
     val segS = f"sets/seg-${v0 + 1}%09d"
     def readSegs(segs: Seq[String]) =
-      spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
+      ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*)
     val segRanges =
       writeClusteredSeg(readSegs(pickedB), dir, segB, "k", nf) ++
         (if (pickedS.isEmpty) Map.empty
@@ -253,7 +255,7 @@ object MinhashIndex {
     def readAll(frame: String) = {
       val segs = entries.getOrElse(frame, Nil)
       require(segs.nonEmpty, s"no committed $frame segments at $dir")
-      val df = spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
+      val df = ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*)
       tomb.fold(df)(t => df.join(t.select("d"), Seq("d"), "left_anti"))
     }
     val segB = f"bands/seg-${v0 + 1}%09d"
@@ -293,7 +295,7 @@ object MinhashIndex {
     val prior = entries.getOrElse("tombstones", Nil)
       .map(s => s"$dir/$s")
     val newIds = (if (prior.isEmpty) incoming
-      else incoming.join(spark.read.parquet(prior: _*).select("d"),
+      else incoming.join(ParquetRead.read(spark, prior: _*).select("d"),
         Seq("d"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -312,7 +314,7 @@ object MinhashIndex {
   private def readTombstones(spark: SparkSession, dir: String,
       entries: Map[String, Seq[String]]): Option[DataFrame] = {
     val paths = entries.getOrElse("tombstones", Nil).map(s => s"$dir/$s")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
   }
 
   private def parseLong(s: String): Option[Any] =
@@ -392,7 +394,7 @@ object MinhashIndex {
                 IndexManifests.broadcastRowCap(bSel.schema))
               broadcast(bSel)
             else bSel
-          spark.read.parquet(paths: _*)
+          ParquetRead.read(spark, paths: _*)
             .join(probeSide, Seq("band", "sig"))
             .select("band", "sig", "d")
         }
@@ -463,9 +465,9 @@ object MinhashIndex {
           else if (candIdSeq.isEmpty)
             batchSets.limit(0)
           else if (candIdSeq.size <= 20000)
-            spark.read.parquet(setPaths: _*)
+            ParquetRead.read(spark, setPaths: _*)
               .filter(col("d").isin(candIdSeq: _*))
-          else spark.read.parquet(setPaths: _*)
+          else ParquetRead.read(spark, setPaths: _*)
             .join(corpusIds, Seq("d"), "left_semi")
         // PINNED: both verify sides join this frame, and its corpus
         // leg is a pruned parquet read + semi-join — candidate-bounded

@@ -3,6 +3,8 @@ package graft.extra
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.ParquetRead
+
 /** Persisted SEMANTIC-dedup index — the ONLINE form of [[Dedup
   * .semDedup]] (Abbas et al. 2023, arXiv:2303.09540), completing the
   * incremental-dedup family: [[MinhashIndex]] serves lexical near-dup
@@ -69,7 +71,7 @@ object SemanticIndex {
   def readCodebook(spark: SparkSession, dir: String)
       : Seq[Similarity.Centroid] =
     IndexManifests.cachedSideFile(spark, s"$dir/codebooks") {
-      spark.read.parquet(s"$dir/codebooks")
+      ParquetRead.read(spark, s"$dir/codebooks")
         .orderBy("pos").collect().toSeq
         .map(r => Similarity.Centroid(r.getAs[Long]("cid"),
           r.getAs[Seq[Double]]("v").toArray, r.getAs[Double]("nrm")))
@@ -184,7 +186,7 @@ object SemanticIndex {
     val pickedSet = picked.toSet
     val seg = f"vectors/seg-${v0 + 1}%09d"
     writeSegment(
-      picked.map(s => spark.read.parquet(s"$dir/$s"))
+      picked.map(s => ParquetRead.read(spark, s"$dir/$s"))
         .reduce(_ unionByName _),
       dir, seg)
     IndexManifests.commit(spark, dir, v0 + 1,
@@ -265,7 +267,7 @@ object SemanticIndex {
   private def readTombstones(spark: SparkSession, dir: String,
       entries: Map[String, Seq[String]]): Option[DataFrame] = {
     val paths = entries.getOrElse("tombstones", Nil).map(s => s"$dir/$s")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
   }
 
   /** Union of the live segments' cluster-partitioned scans —
@@ -276,7 +278,7 @@ object SemanticIndex {
   private def readVectors(spark: SparkSession, dir: String,
       entries: Map[String, Seq[String]]): Option[DataFrame] =
     entries.getOrElse("vectors", Nil)
-      .map(s => spark.read.parquet(s"$dir/$s")
+      .map(s => ParquetRead.read(spark, s"$dir/$s")
         .select(col("list_id").cast("long").as("list_id"),
           col("d"), col("v"), col("nrm")))
       .reduceOption(_ unionByName _)

@@ -9,6 +9,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
   LongType, MapType, StringType, StructType, TimestampNTZType,
   TimestampType}
 
+import graft.util.ParquetRead
+
 /** Snapshot-versioned table: the manifest-commit layer every
   * [[Merge]]/[[ViewStream]] scaladoc defers to "at 100 TB". A table is
   * a DIRECTORY OF IMMUTABLE DATA FILES plus a chain of manifest files,
@@ -598,7 +600,7 @@ object Snapshots {
           .getOrElse(throw new IllegalStateException(
             s"version $v of $dir is empty and no earlier version holds " +
               "a schema-bearing file"))
-      spark.read.parquet(
+      ParquetRead.read(spark,
         donor.map(f => new Path(dataDir(root), f).toString): _*).schema
     }
   }
@@ -1002,7 +1004,7 @@ object Snapshots {
         "cannot prune on (supported: int, long, string, timestamp, " +
         "timestamp_ntz)")
     val staged = writeData(df, fs, root, key, numFiles, zorderCols)
-    val back = spark.read.parquet(
+    val back = ParquetRead.read(spark,
       staged.map(f => new Path(dataDir(root), f).toString): _*)
     val rows = back.count()
     val stats = stagedStats(spark, root, staged, key +: allStats)
@@ -1294,7 +1296,7 @@ object Snapshots {
     val df = read(spark, dir, Some(parent))
     val zorder = zorderColumns(spark, dir, parent)
     val staged = writeData(df, fs, root, key, n, zorder)
-    val rows = spark.read.parquet(
+    val rows = ParquetRead.read(spark,
       staged.map(f => new Path(dataDir(root), f).toString): _*).count()
     val statsCols = statsColumns(spark, dir, parent)
     val stats = stagedStats(spark, root, staged, key +: statsCols)
@@ -1614,7 +1616,7 @@ object Snapshots {
     val zorder = zorderColumns(spark, dir, parent)
     val staged = writeData(out, fs, root, key,
       math.max(1, touchedNames.size), zorder)
-    val rows = if (staged.isEmpty) 0L else spark.read.parquet(
+    val rows = if (staged.isEmpty) 0L else ParquetRead.read(spark,
       staged.map(f => new Path(dataDir(root), f).toString): _*).count()
     // carried-by-reference entries keep their parent-manifest ranges;
     // only the staged files' footers are read (once, while hot).

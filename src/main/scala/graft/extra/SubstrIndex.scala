@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
+import graft.util.ParquetRead
+
 /** Persisted duplicated-gram posting index — the INCREMENTAL arm of
   * ExactSubstr span dedup (r13 verdict #1, the operator a 100 TB
   * pipeline actually runs daily): the corpus' positioned k-grams are
@@ -172,7 +174,7 @@ object SubstrIndex {
     */
   def meta(spark: SparkSession, dir: String): (Int, Boolean) =
     IndexManifests.cachedSideFile(spark, s"$dir/meta") {
-      val r = spark.read.parquet(s"$dir/meta").head()
+      val r = ParquetRead.read(spark, s"$dir/meta").head()
       (r.getAs[Int]("k"), r.getAs[Boolean]("hashed"))
     }
 
@@ -397,7 +399,7 @@ object SubstrIndex {
     val seg = f"grams/tier-$v0%09d"
     // same one-exchange merge shape as [[compact]], over the picked
     // tier's partial rows only
-    val merged = spark.read.parquet(picked.map(s => s"$dir/$s"): _*)
+    val merged = ParquetRead.read(spark, picked.map(s => s"$dir/$s"): _*)
       .repartitionByRange(IndexManifests.tierFileCount(bytes), col("g"))
       .groupBy(col("g"))
       .agg(sum(col("n")).as("n"),
@@ -537,7 +539,7 @@ object SubstrIndex {
     val seg = f"grams/seg-${v0 + 1}%09d"
     // same one-exchange shape as clusteredPartials, over the (g,n,d,p)
     // partial rows: range-partition first, merge inside the partitions
-    val merged = spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
+    val merged = ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*)
       .repartitionByRange(numFiles, col("g"))
       .groupBy(col("g"))
       .agg(sum(col("n")).as("n"),
@@ -641,7 +643,7 @@ object SubstrIndex {
             IndexManifests.broadcastRowCap(batchKeys.schema))
           broadcast(batchKeys)
         else batchKeys
-      val matched = spark.read.parquet(paths: _*)
+      val matched = ParquetRead.read(spark, paths: _*)
         .join(probeSide, "g")
         .groupBy(col("g"))
         .agg(sum(col("n")).as("cn"),

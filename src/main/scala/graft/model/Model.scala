@@ -86,13 +86,24 @@ object Tables {
     *     reading of the same naive column. A defensive NTZ→TIMESTAMP
     *     cast fold remains for frames read before the conf was set
     *     (cached plans), where it is a no-op otherwise.
+    *
+    * The read goes through [[graft.util.ParquetRead]]: the schema is
+    * inferred (one Spark job) the first time a table's file content is
+    * seen under these confs, and every later load of the same bytes
+    * starts no job until its query runs. Both confs are part of that
+    * memo's key, so flipping either one re-infers.
     */
   def load(spark: org.apache.spark.sql.SparkSession, dir: String, name: String)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val raw = spark.read.parquet(path(dir, name))
+    normalize(name, graft.util.ParquetRead.read(spark, path(dir, name)))
+  }
+
+  /** [[load]]'s timestamp normalization of an already-read table. */
+  private[graft] def normalize(name: String,
+      raw: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     val df =
       if (name == "events" &&
         raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)

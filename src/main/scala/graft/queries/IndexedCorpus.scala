@@ -5,6 +5,8 @@ import java.io.File
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.ParquetRead
+
 /** Build-if-absent persisted indexes for the registered serving
   * queries — the amortized production semantics made literal: an index
   * is built ONCE per distinct corpus CONTENT and every later query
@@ -57,8 +59,8 @@ object IndexedCorpus {
     // corpus pass just to learn the fingerprint it already computed.
     // The key is the cachedSideFile discipline (IndexManifests): the
     // canonical ANALYZED plan pins the logical content definition
-    // (filters, column picks) and the sorted (path, length, mtime)
-    // listing pins the bytes under it — touch a file and the key
+    // (filters, column picks) and the sorted (path, size, mtime ns,
+    // fileKey) listing pins the bytes under it — touch a file and the key
     // misses, so the rescue path is exactly the old behavior. Frames
     // without local file sources (in-memory test frames, non-file
     // URIs) skip the memo and always rescan.
@@ -88,14 +90,13 @@ object IndexedCorpus {
     if (!allFileLeaves) return None
     val files = df.inputFiles
     if (files.isEmpty) return None
-    val stats = new StringBuilder
-    for (f <- files.sorted) {
+    val local = files.sorted.toSeq.map { f =>
       val uri = try new java.net.URI(f) catch { case _: Exception => return None }
       if (uri.getScheme != null && uri.getScheme != "file") return None
-      val p = new File(uri.getPath)
-      stats.append(f).append(':').append(p.length()).append(':')
-        .append(p.lastModified()).append(';'): Unit
+      java.nio.file.Paths.get(uri.getPath)
     }
+    // the listing that also keys the parquet schema memo
+    val stats = ParquetRead.listing(local).getOrElse(return None)
     // ADVICE r16: key on the canonicalized plan's JSON, not toString —
     // toString truncates field lists at spark.sql.debug.maxToStringFields
     // and omits LocalRelation rows, so it is lossy; toJSON serializes
@@ -106,7 +107,7 @@ object IndexedCorpus {
     catch { case _: Exception => return None }
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.update(plan.getBytes("UTF-8"))
-    md.update(stats.toString.getBytes("UTF-8"))
+    md.update(stats.getBytes("UTF-8"))
     Some(md.digest().map(b => f"$b%02x").mkString)
   }
 
@@ -302,7 +303,7 @@ object IndexedCorpus {
         .toDF("pos", "cid", "v", "nrm")
         .coalesce(1).write.mode("overwrite").parquet(d.toString)
     }
-    spark.read.parquet(d.toString).select("pos", "cid", "v", "nrm")
+    ParquetRead.read(spark, d.toString).select("pos", "cid", "v", "nrm")
       .collect()
       .map(r => (r.getInt(0), graft.extra.Similarity.Centroid(
         r.getLong(1), r.getSeq[Double](2).toArray, r.getDouble(3))))

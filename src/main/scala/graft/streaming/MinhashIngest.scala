@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.extra.{IndexManifests, MinhashIndex}
-import graft.util.LocalFs
+import graft.util.{LocalFs, ParquetRead}
 
 /** STREAMING incremental near-dup ingest — the crawl-pipeline shape of
   * [[graft.extra.MinhashIndex]], mirroring [[SubstrIngest]]: each
@@ -57,7 +57,7 @@ object MinhashIngest {
         .parquet(s"$outDir/batch=$batchId")
       // survivors only: a doc flagged dup must NOT become a canonical
       // for later batches (the curation-drop semantics)
-      val keptIds = spark.read.parquet(s"$outDir/batch=$batchId")
+      val keptIds = ParquetRead.read(spark, s"$outDir/batch=$batchId")
         .filter(!col("is_dup")).select(col(idCol))
       MinhashIndex.append(
         batch.join(keptIds, Seq(idCol), "left_semi")

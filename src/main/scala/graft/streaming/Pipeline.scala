@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.ops.Features
 import graft.ops.Features.FeatureConfig
-import graft.util.{Durations, LocalFs}
+import graft.util.{Durations, LocalFs, ParquetRead}
 
 /** The streaming flagship pipeline — reference consumer parity
   * (spark_streaming.py:299-341): source → parse → watermark → sliding
@@ -92,7 +92,7 @@ object StreamingPipeline {
     */
   def finalized(spark: SparkSession, outDir: String): DataFrame =
     graft.extra.Dedup.latestWins(
-      spark.read.parquet(outDir),
+      ParquetRead.read(spark, outDir),
       keys = Seq("symbol", "window_start"),
       tsCol = "batch_id", tieCol = "num_ticks")
 
