@@ -78,7 +78,8 @@ object StreamBench {
     * run easily exceeds 100 micro-batches, silently undercounting rows.
     *
     * Shutdown is a two-step drain, not a hard `q.stop()`: flipping the
-    * sink gate makes subsequent batches no-ops, and we stop only after
+    * sink gate makes the next batches' writers drop their rows and open
+    * no file (the gate is read once per batch), and we stop only after
     * the batch that was in flight at the deadline has committed — a hard
     * stop mid-parquet-write aborts all its tasks and sprays stack traces
     * over stdout (which displaced the metric line from round 3's

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftStreamBridge, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.ops.Features
@@ -9,10 +9,10 @@ import graft.util.{Durations, LocalFs, ParquetRead}
 
 /** The streaming flagship pipeline — reference consumer parity
   * (spark_streaming.py:299-341): source → parse → watermark → sliding
-  * windowed features → update-mode foreachBatch sink.
+  * windowed features → update-mode parquet sink ([[FeatureSink]]).
   *
   * Differences from the reference, by design (SURVEY.md §4.3):
-  *   - the sink writes DISTRIBUTED parquet appends inside foreachBatch —
+  *   - the sink writes DISTRIBUTED parquet appends from the write tasks —
   *     never `toPandas()`-style driver collection (§4.3 #1); at 100 TB
   *     the driver funnel is the first thing that dies.
   *   - watermark (lateness) is an independent knob instead of being
@@ -41,9 +41,21 @@ object StreamingPipeline {
   def transform(raw: DataFrame, cfg: Config): DataFrame =
     Features.compute(graft.ops.TickParse.parseRaw(raw), featureConfig(cfg))
 
-  /** Start the full query: update-mode, checkpointed, distributed
-    * parquet append sink with the emission timestamp column the
-    * last-wins finalizer keys on.
+  /** Start the full query: update-mode, checkpointed, written by
+    * [[FeatureSink]] as one DSv2 streaming parquet write per micro-batch
+    * (no `foreachBatch`, so a batch plans one query, not two).
+    *
+    * The sink prepares Spark's parquet write once per query (the
+    * session's codec, timestamp type and `parquet.*` confs) and
+    * broadcasts its Hadoop conf. Each batch appends `batch_id`,
+    * `ingest_ts` (one driver clock reading per batch) and `latency_ms`
+    * (`ingest_ts` minus `max_event_time`, in ms) — the reference's
+    * processing-time fields (spark_streaming.py:109-116), wall-clock
+    * derived and so excluded from oracle hashing. Each task stages one
+    * hidden file; the batch commit renames it to a name fixed by
+    * (batch id, partition), so a batch replayed from the checkpoint
+    * replaces its files rather than appending duplicates. No Hadoop
+    * committer runs: no `_temporary` directory, no `_SUCCESS` file.
     *
     * A local checkpoint is written through [[graft.util.LocalFs]], the
     * fork-free `file:` binding this installs in the session conf
@@ -51,39 +63,23 @@ object StreamingPipeline {
     * files, permissions and `.crc` sidecars as stock Hadoop, without the
     * ~20 `chmod`/`readlink` forks per state partition per micro-batch.
     *
-    * `sinkGate` is a graceful-drain hook: while it returns true batches
-    * write parquet normally; once it flips false each micro-batch runs
-    * against the `noop` sink instead — every partition is still
-    * processed (update-mode state commit validation requires it) but no
-    * files are opened, so a subsequent `q.stop()` can never abort
-    * in-flight parquet tasks (stopping mid-write sprays `Aborting task`
-    * / `CommitDeniedException` across the driver log — that spew
-    * destroyed round 3's bench artifact).
+    * `sinkGate` is a graceful-drain hook, read once per batch: while it
+    * returns true batches write parquet; once it flips false every
+    * partition is still processed (update-mode state commit validation
+    * requires it) but the writers drop their rows and open no file, so
+    * a subsequent `q.stop()` can never abort in-flight parquet tasks
+    * (stopping mid-write sprays `Aborting task` / `CommitDeniedException`
+    * across the driver log — that spew destroyed round 3's bench
+    * artifact).
     */
   def start(spark: SparkSession, source: TickSource, cfg: Config,
       trigger: Trigger = Trigger.AvailableNow(),
       sinkGate: () => Boolean = () => true): StreamingQuery = {
-    import org.apache.spark.sql.functions.lit
     val features = StreamingPipeline.transform(source.stream(spark), cfg)
     LocalFs.install(features.sparkSession)
-    features
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(trigger)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{current_timestamp, unix_millis}
-        // reference-parity processing-time fields (spark_streaming.py:
-        // 109-116) — wall-clock derived, so excluded from oracle hashing
-        val out = df.withColumn("batch_id", lit(batchId))
-          .withColumn("ingest_ts", current_timestamp())
-          .withColumn("latency_ms",
-            unix_millis(current_timestamp()) -
-              unix_millis(org.apache.spark.sql.functions.col("max_event_time")))
-        if (sinkGate()) out.write.mode("append").parquet(cfg.outDir)
-        else out.write.format("noop").mode("overwrite").save()
-      }
-      .start()
+    GraftStreamBridge.start(features,
+      new FeatureSink(features.sparkSession, cfg.outDir, sinkGate),
+      cfg.checkpointDir, OutputMode.Update(), trigger)
   }
 
   /** Collapse the append+last-wins sink to final rows per

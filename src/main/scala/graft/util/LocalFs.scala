@@ -47,7 +47,7 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   * ones stock writes. Spark's checkpoint and state-store I/O goes
   * through `FileContext`, so this reaches the offset and commit logs
   * and every state store; `FileSystem`-API writers (the parquet sink's
-  * committer) are untouched.
+  * file writes and renames) are untouched.
   */
 class LocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
     new LocalFs.Raw(uri, conf)) {

@@ -20,3 +20,18 @@ object GraftPlanBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
+
+/** Bridge to the session's streaming query manager, which starts a query
+  * on a connector `Table` object (the public `DataStreamWriter` takes only
+  * a format name or a catalog table), and to the session's Hadoop conf. */
+object GraftStreamBridge {
+  def start(df: DataFrame, sink: org.apache.spark.sql.connector.catalog.Table,
+      checkpointDir: String, mode: streaming.OutputMode,
+      trigger: streaming.Trigger): streaming.StreamingQuery =
+    df.sparkSession.asInstanceOf[classic.SparkSession].streams.startQuery(
+      None, Some(checkpointDir), df.asInstanceOf[classic.Dataset[_]],
+      Map.empty, sink, mode, trigger = trigger)
+
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+}

@@ -213,6 +213,12 @@ class StreamingSpec extends SparkSpec {
     val named = forks.filter(_.contains(ckptName))
     assert(named.size == 0,
       s"processes named the checkpoint, e.g. ${named.take(3)}")
+    // the sink runs no Hadoop output committer
+    val outName = Paths.get(out).getFileName.toString
+    val committer = forks.filter(c => c.contains(outName) &&
+      (c.contains("_temporary") || c.contains("_SUCCESS")))
+    assert(committer.isEmpty,
+      s"processes named the committer's files, e.g. ${committer.take(3)}")
   }
 
   /** Write a checkpoint under `first`, restart it under `second`: the
