@@ -1,6 +1,7 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (bypasses the sbt
-# project lock, so probes/benches can run while a test suite holds it).
+# project lock, so smokes, tools and benches can run while a test suite
+# holds it).
 # The scala-library jar is resolved from the local coursier cache.
 SCALA_LIB="$(find "$HOME/.cache/coursier" -name 'scala-library-2.13*.jar' 2>/dev/null | sort | tail -1)"
 CP="/root/repo/target/scala-2.13/classes:$SCALA_LIB:/opt/spark/jars/*"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Analytics scale smoke (builder tooling): the pair-correlation cost
@@ -13,10 +12,7 @@ object AnalyticsSmoke {
   def main(args: Array[String]): Unit = {
     val k = args.headOption.map(_.toInt).getOrElse(300)
     val buckets = 720 // 30 days hourly
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     // one observation per (key, hour); key 1 is an exact linear image
     // of key 0 (corr must be exactly 1.0 after the 6-dp roll-up)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.extra.Similarity
@@ -35,14 +34,7 @@ object AnnSmoke {
     val nQ = args.lift(2).map(_.toInt).getOrElse(100)
     val mode = args.lift(3).getOrElse("random")
     val dim = 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     def corpus(rows: Long) = spark.range(rows).select(
       col("id").as("vec_id"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew scale smoke for the as-of join family: ONE hypertraded key
@@ -15,14 +14,7 @@ object AsofSmoke {
   def main(args: Array[String]): Unit = {
     val nLeft = args.headOption.map(_.toLong).getOrElse(5000000L)
     val nRight = args.lift(1).map(_.toLong).getOrElse(5000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     import graft.extra.TimeSeries
 
     // one key, interleaved trade/quote timelines over ~nLeft seconds

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone driver for the streaming-classifier bench block
   * ([[StreamBench.measureClassify]]) — quiet-box capacity probes
   * without running the whole bench.
@@ -12,11 +10,7 @@ object ClassifySmoke {
   def main(args: Array[String]): Unit = {
     val tps = args.lift(0).map(_.toInt).getOrElse(120000)
     val secs = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     val s = StreamBench.measureClassify(spark, tps, secs)
     println(s"""{"streaming_classify":${s.json}}""")
     spark.stop()

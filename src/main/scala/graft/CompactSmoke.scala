@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.extra.{AnnIndex, Bm25Index}
@@ -35,11 +34,7 @@ object CompactSmoke {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(40)
     val perBatch = args.lift(1).map(_.toLong).getOrElse(20000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     val base = java.nio.file.Files.createTempDirectory("graft_compact_smoke")
       .toString

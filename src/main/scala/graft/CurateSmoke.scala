@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Curation scale smoke: run the full end-to-end curation pipeline
@@ -31,14 +30,7 @@ object CurateSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(200000L)
     val hot = args.lift(1).contains("hot")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     import graft.gen.SyntheticDocs.textFor
     def corpus(rows: Long) = {

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -29,14 +28,7 @@ object CurationStreamSmoke {
   def main(args: Array[String]): Unit = {
     val tps = args.headOption.map(_.toInt).getOrElse(20000)
     val secs = args.lift(1).map(_.toInt).getOrElse(45)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     val wire = graft.gen.SyntheticDocs.rateWire(spark, tps)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Banded-Hamming fingerprint dedup scale smoke (builder tooling):
@@ -21,10 +20,7 @@ import org.apache.spark.sql.functions._
 object FingerprintSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     def run(m: Long): Unit = {
       // even ids: random 56-bit hash; id 100k+1 copies 100k with bit 3

@@ -102,10 +102,7 @@ object FuzzySmoke {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     def run(rows: Long): (Double, Long, Long) = {
       // cap scales with the RUN size and sits BETWEEN the gram
       // classes: interior code grams and boundary grams with >=3 code

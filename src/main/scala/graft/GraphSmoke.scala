@@ -24,10 +24,7 @@ object GraphSmoke {
     val nEdges = args.headOption.map(_.toLong).getOrElse(5000000L)
     val mode = args.lift(1).getOrElse("pagerank")
     val nNodes = math.max(1000L, nEdges / 10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     if (mode == "triangles") { runTriangles(spark, nEdges, nNodes); return }
     if (mode == "cc") { runCc(spark, nEdges, nNodes); return }
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Builder tooling (r16 optimization round): per-query job/stage/task
   * census. For each named registry query it reports, per timed run:
@@ -49,13 +48,9 @@ object JobAudit {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir =
       sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "16384"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = ToolSession.cpus
+    val spark = ToolSession(_.config("spark.sql.codegen.cache.maxEntries",
+      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "16384")))
     val census = new Census
     spark.sparkContext.addSparkListener(census)
     val qs = args.toSeq.map { name =>

@@ -30,11 +30,7 @@ object MergeSmoke {
     val sizes = args.headOption.map(_.split(",").map(_.toLong).toSeq)
       .getOrElse(Seq(1000000L, 8000000L))
     val nFiles = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     for (n <- sizes) runOnce(spark, n, nFiles)
     spark.stop()
   }

@@ -37,14 +37,8 @@ object PipelineSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200000)
     val nb = args.drop(1).headOption.map(_.toInt).getOrElse(20000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-pipeline-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession(b => sys.env.get("SPARK_GRAFT_MASTER")
+      .fold(b)(b.master).appName("graft-pipeline-smoke"))
     import spark.implicits._
 
     val t00 = System.nanoTime()

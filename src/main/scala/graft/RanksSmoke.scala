@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.Ranks
@@ -32,14 +31,7 @@ object RanksSmoke {
     val n = args.headOption.map(_.toLong).getOrElse(20000000L)
     if (args.lift(1).contains("grouped")) { groupedMain(n); return }
     val compareWindow = args.lift(1).forall(_ == "window")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     def corpus(rows: Long) = spark.range(rows)
       .select(col("id"),
@@ -100,14 +92,7 @@ object RanksSmoke {
     * replaces, checksum-compared.
     */
   private def groupedMain(n: Long): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     // Zipf-ish groups via floor(log2(uniform)): the TOP group holds
     // ~half the rows, the next a quarter, ... ~16 groups — the
     // language distribution of a web corpus

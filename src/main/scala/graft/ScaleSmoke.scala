@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.gen.TickGen
 import graft.ops.{Features, TickParse}
 import graft.ops.Features.FeatureConfig
@@ -17,14 +15,7 @@ import graft.ops.Features.FeatureConfig
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     // one small warmup
     Features.compute(TickParse.withEventTime(TickGen.gbm(spark, 10000)),
       FeatureConfig()).count()

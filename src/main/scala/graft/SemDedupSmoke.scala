@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.extra.Dedup
@@ -27,14 +26,7 @@ object SemDedupSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(300000L)
     val dim = 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     // every 10th id is a near-copy of id-1; base component in [-1, 1),
     // copy noise in [0, 0.005)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.extra.Snapshots
@@ -26,11 +25,7 @@ object SnapshotSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(4000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(64)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     def corpus(rows: Long) = spark.range(rows).select(col("id"),
       xxhash64(col("id")).cast("double").as("score"),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.extra.IncrementalAgg
@@ -26,11 +25,7 @@ object ViewSmoke {
     val n = args.headOption.map(_.toLong).getOrElse(16000000L)
     val grains = args.lift(1).map(_.toInt).getOrElse(2000)
     val nFiles = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime

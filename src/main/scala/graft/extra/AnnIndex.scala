@@ -223,7 +223,7 @@ object AnnIndex {
     // tombstoned ids (see delete()) drop out of every scan; the static
     // list_id IN (probed) filter searchIvfPq adds still pushes through
     // the left-anti join to the partitioned read (left-side predicate)
-    val coded = readTombstones(spark, dir, entries)
+    val coded = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(coded0)(t => coded0.join(t, Seq("id"), "left_anti"))
     Similarity.IvfPqIndex(cb.coarse, cb.pq, cb.m, cb.sub, coded,
       cb.residual)
@@ -412,13 +412,6 @@ object AnnIndex {
     true
   }
 
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]])
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val paths = entries.getOrElse("tombstones", Nil).map(r => s"$dir/$r")
-    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
-  }
-
   /** Delete vectors from the index — the dense mirror of
     * [[Bm25Index.delete]], LSM-style: ids are appended to a
     * `tombstones/` frame (O(batch), the partitioned codes are NOT
@@ -444,7 +437,7 @@ object AnnIndex {
     // grow the frame linearly with RUNS, and every search's anti-join
     // pays for the duplicates until a compact (Bm25Index.delete
     // already dedups; this is its dense mirror)
-    val newIds = readTombstones(spark, dir, entries)
+    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(incoming)(t =>
         incoming.join(t.select("id"), Seq("id"), "left_anti"))
     val seg = f"tombstones/seg-${v0 + 1}%09d"
@@ -489,7 +482,7 @@ object AnnIndex {
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1): Unit = {
     val (v0, entries) = entriesOf(spark, dir)
-    val tomb = readTombstones(spark, dir, entries)
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     val live0 = readCodes(spark, dir, entries)
     val seg = f"codes/seg-${v0 + 1}%09d"
     tomb.fold(live0)(t => live0.join(t, Seq("id"), "left_anti"))
@@ -534,7 +527,7 @@ object AnnIndex {
     val cb = readCodebooks(spark, dir)
     val entries = IndexManifests.at(spark, dir, version)
     val coded0 = readCodes(spark, dir, entries)
-    val coded = readTombstones(spark, dir, entries)
+    val coded = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(coded0)(t => coded0.join(t, Seq("id"), "left_anti"))
     Similarity.IvfPqIndex(cb.coarse, cb.pq, cb.m, cb.sub, coded,
       cb.residual)

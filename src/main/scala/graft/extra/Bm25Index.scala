@@ -79,38 +79,7 @@ object Bm25Index {
 
   private val Frames = Seq("tf", "dl", "df", "meta", "tombstones")
 
-  private def latest(spark: SparkSession, dir: String)
-      : Option[(Long, Map[String, Seq[String]])] =
-    IndexManifests.latest(spark, dir)
-
-  private def latestFull(spark: SparkSession, dir: String) =
-    IndexManifests.latestFull(spark, dir)
-
-  private def requireLatest(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]]) =
-    IndexManifests.requireLatest(spark, dir, "BM25")
-
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    latestFull(spark, dir).getOrElse(throw new IllegalStateException(
-      s"no committed BM25 index at $dir (missing _manifests)"))
-
-  private def commit(spark: SparkSession, dir: String, version: Long,
-      entries: Map[String, Seq[String]],
-      ranges: Map[String, (String, String)] = Map.empty): Unit =
-    IndexManifests.commit(spark, dir, version, entries, ranges)
-
-  /** Read one frame as the union of its committed segments; None when
-    * the manifest lists no segment for it (e.g. no tombstones yet).
-    */
-  private def readFrame(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]], frame: String)
-      : Option[DataFrame] = {
-    val paths = entries.getOrElse(frame, Nil).map(rel => s"$dir/$rel")
-    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
-  }
-
-  /** [[readFrame]] with MANIFEST-RANGE file pruning (the r15
+  /** [[IndexManifests.readFrame]] with MANIFEST-RANGE file pruning (the r15
     * [[SubstrIndex]] discipline applied to the term frames): when the
     * COMPLETE query-term list is known, a segment whose files carry
     * `#range=` term stats contributes only the files whose recorded
@@ -165,10 +134,6 @@ object Bm25Index {
     }
   }
 
-  private def dropOrphanSegments(spark: SparkSession, dir: String,
-      live: Map[String, Seq[String]]): Unit =
-    IndexManifests.dropOrphanSegments(spark, dir, Frames, live)
-
   /** Tokenize the corpus once and persist tf/dl/df/meta as one new
     * SEGMENT per frame, then commit the manifest (the crash-atomic
     * point — a failure before it leaves the index exactly as it was).
@@ -187,7 +152,7 @@ object Bm25Index {
       s"build supports Overwrite|Append, got $mode")
     val spark = docs.sparkSession
     import spark.implicits._
-    val prevFull = latestFull(spark, dir)
+    val prevFull = IndexManifests.latestFull(spark, dir)
     val prev = prevFull.map { case (v, e, _) => (v, e) }
     val prevRanges = prevFull.map(_._3)
       .getOrElse(Map.empty[String, (String, String)])
@@ -212,7 +177,7 @@ object Bm25Index {
         val p = new org.apache.hadoop.fs.Path(s"$dir/$f")
         fs.exists(p) && fs.listStatus(p).nonEmpty
       }
-      if (legacyData) requireLatest(spark, dir): Unit
+      if (legacyData) IndexManifests.requireLatest(spark, dir, "BM25"): Unit
     }
     val prevV = prev.map(_._1).getOrElse(0L)
     val base: Map[String, Seq[String]] =
@@ -268,11 +233,11 @@ object Bm25Index {
     val ranges =
       (if (mode == SaveMode.Append) prevRanges
        else Map.empty[String, (String, String)]) ++ segRanges
-    commit(spark, dir, v,
+    IndexManifests.commit(spark, dir, v,
       txn.fold(entries) { case (sid, b) =>
         IndexManifests.withTxn(entries, sid, b) }, ranges)
     if (mode == SaveMode.Overwrite && prev.nonEmpty)
-      dropOrphanSegments(spark, dir, entries)
+      IndexManifests.dropOrphanSegments(spark, dir, Frames, entries)
   }
 
   /** Incrementally ingest a NEW batch of documents into a persisted
@@ -318,7 +283,8 @@ object Bm25Index {
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
       retainVersions: Int = 1): Boolean = {
     import spark.implicits._
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     val tfSegs = entries.getOrElse("tf", Nil)
     val sizes = IndexManifests.segmentBytes(spark, dir, tfSegs)
     val pickedTf = IndexManifests.pickTier(sizes, fanout)
@@ -370,15 +336,11 @@ object Bm25Index {
          else IndexManifests.fileRangeStats(spark, dir, s"df/$seg",
            "term"))
     val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedAll)
-    commit(spark, dir, v, fresh, keptRanges ++ segRanges)
+    IndexManifests.commit(spark, dir, v, fresh, keptRanges ++ segRanges)
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
     true
   }
-
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]]): Option[DataFrame] =
-    readFrame(spark, dir, entries, "tombstones")
 
   /** Delete documents from the index — the takedown mirror of
     * [[graft.extra.Merge.delete]] for the sparse arm, LSM-style (the
@@ -413,9 +375,10 @@ object Bm25Index {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "id"): Long = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     val incoming = ids.select(col(idCol).as("id")).distinct()
-    val newIds = readTombstones(spark, dir, entries)
+    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(incoming)(t =>
         incoming.join(t.select("id"), Seq("id"), "left_anti"))
       .persist()
@@ -430,7 +393,7 @@ object Bm25Index {
       // negative-meta write (the first design) left a crash window
       // between two appends in which a retried delete would
       // double-subtract meta
-      val dl = readFrame(spark, dir, entries, "dl").get
+      val dl = IndexManifests.readFrame(spark, dir, entries, "dl").get
       newIds
         .join(dl, Seq("id"), "left_outer")
         .select(col("id"),
@@ -438,7 +401,7 @@ object Bm25Index {
           coalesce(col("dl"), lit(0L)).as("s"))
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$dir/tombstones/$seg")
-      commit(spark, dir, v, entries +
+      IndexManifests.commit(spark, dir, v, entries +
         ("tombstones" -> (entries.getOrElse("tombstones", Nil) :+
           s"tombstones/$seg")), ranges)
       nNew
@@ -458,10 +421,11 @@ object Bm25Index {
     // have changed under an unchanged manifest
     IndexManifests.cachedByEntries(spark, dir, Seq("meta", "tombstones"),
         entries) {
-      val m = readFrame(spark, dir, entries, "meta").get
+      val m = IndexManifests.readFrame(spark, dir, entries, "meta").get
         .agg(coalesce(sum("n_docs"), lit(0L)).as("n"),
           coalesce(sum("sum_dl"), lit(0L)).as("s")).head()
-      val (tn, ts) = readTombstones(spark, dir, entries).map { t =>
+      val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
+      val (tn, ts) = tomb.map { t =>
         val r = t.agg(coalesce(sum("n"), lit(0L)).as("n"),
           coalesce(sum("s"), lit(0L)).as("s")).head()
         (r.getLong(0), r.getLong(1))
@@ -492,11 +456,11 @@ object Bm25Index {
   def compact(spark: SparkSession, dir: String, numFiles: Int = 8,
       retainVersions: Int = 1): Unit = {
     import spark.implicits._
-    val (v0, entries) = requireLatest(spark, dir)
+    val (v0, entries) = IndexManifests.requireLatest(spark, dir, "BM25")
     val v = v0 + 1
     val seg = f"seg-$v%09d"
-    val tomb = readTombstones(spark, dir, entries)
-    val tf0 = readFrame(spark, dir, entries, "tf").get
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
+    val tf0 = IndexManifests.readFrame(spark, dir, entries, "tf").get
     val (tfKept, dfCorr) = tomb match {
       case None => (tf0, None)
       case Some(t) =>
@@ -506,14 +470,14 @@ object Bm25Index {
     }
     Layout.writeClustered(tfKept, s"$dir/tf/$seg",
       Seq(col("term"), col("id")), numFiles)
-    val dl0 = readFrame(spark, dir, entries, "dl").get
+    val dl0 = IndexManifests.readFrame(spark, dir, entries, "dl").get
     val dlKept =
       tomb.fold(dl0)(t => dl0.join(t.select("id"), Seq("id"), "left_anti"))
     // id-clustered multi-file, as in build — the corpus-wide dl
     // frame never funnels through one task
     Layout.writeClustered(dlKept, s"$dir/dl/$seg", Seq(col("id")),
       math.max(1, numFiles / 4))
-    val dfSummed = readFrame(spark, dir, entries, "df").get
+    val dfSummed = IndexManifests.readFrame(spark, dir, entries, "df").get
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val dfFinal = dfCorr match {
       case None => dfSummed
@@ -543,7 +507,7 @@ object Bm25Index {
     val freshRanges =
       IndexManifests.fileRangeStats(spark, dir, s"tf/$seg", "term") ++
         IndexManifests.fileRangeStats(spark, dir, s"df/$seg", "term")
-    commit(spark, dir, v, fresh, freshRanges)
+    IndexManifests.commit(spark, dir, v, fresh, freshRanges)
     // retention window for readers pinned to recent versions — the
     // [[AnnIndex.compact]] contract shared through the manifest layer;
     // the default 1 keeps the immediate drop
@@ -564,9 +528,9 @@ object Bm25Index {
     * common-terms handling): a query term present in more than that
     * fraction of the corpus contributes ~nothing to ranking (shifted
     * idf ≈ ln(1+ε)) yet drags df(term) ≈ N rows through the scan, the
-    * per-query fan-out join, and the per-(query, doc) aggregation — at
-    * 1M synthetic docs the 8 universal stopwords alone blew a 200-term
-    * search to 20M aggregated rows and ~25 s (Profile `bm25idx`).
+    * per-query fan-out join, and the per-(query, doc) aggregation (a
+    * past measurement at 1M synthetic docs: the 8 universal stopwords
+    * alone blew a 200-term search to 20M aggregated rows and ~25 s).
     * Pruning happens at the df frame (read FIRST, |query| rows), so
     * dropped terms never reach the tf scan at all. Default 1.0 = off —
     * bit-parity with [[Retrieval.bm25SearchAll]] preserved. When on:
@@ -583,7 +547,8 @@ object Bm25Index {
       s"maxDfRatio must be in (0, 1], got $maxDfRatio")
     import spark.implicits._
     // ONE manifest resolution for the whole call — the snapshot
-    val (_, entries, fileRanges) = requireLatestFull(spark, dir)
+    val (_, entries, fileRanges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     // meta rows are per-build/append partials (log-structured layout),
     // net of tombstoned docs' carried contributions
     val (nDocs, sumDl) = netMeta(spark, dir, entries)
@@ -647,12 +612,12 @@ object Bm25Index {
     // tombstoned docs drop out of the candidates here — before the
     // rank window, so lower-ranked survivors fill the top-k (see
     // delete(): membership is exact immediately, df exact after compact)
-    val tfLive = readTombstones(spark, dir, entries)
+    val tfLive = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(tfq)(t => tfq.join(t.select("id"), Seq("id"), "left_anti"))
     val scored = tfLive
       .join(broadcast(qterms), Seq("term"))
       .join(broadcast(idf.select("term", "idf")), Seq("term"))
-      .join(readFrame(spark, dir, entries, "dl").get, Seq("id"))
+      .join(IndexManifests.readFrame(spark, dir, entries, "dl").get, Seq("id"))
       .groupBy(col(queryIdCol), col("id"))
       .agg(count(lit(1)).as("n_hits"),
         round(sum(contrib).cast("double"), 6).as("score"))
@@ -676,7 +641,8 @@ object Bm25Index {
     require(maxDfRatio > 0.0 && maxDfRatio <= 1.0,
       s"maxDfRatio must be in (0, 1], got $maxDfRatio")
     import spark.implicits._
-    val (_, entries, fileRanges) = requireLatestFull(spark, dir)
+    val (_, entries, fileRanges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     val terms0 = queryTerms.map(_.toLowerCase).distinct
     // meta/df partials aggregate at read (log-structured layout), net
     // of tombstoned docs' carried contributions
@@ -700,14 +666,15 @@ object Bm25Index {
         .filter(col("df") <= lit((maxDfRatio * nDocs.toDouble).toLong))
         .select("term").as[String].collect().toSeq
     if (terms.isEmpty) // every query term was stop-cut → no hits
-      return readFrame(spark, dir, entries, "dl").get.filter(lit(false))
+      return IndexManifests.readFrame(spark, dir, entries, "dl").get
+        .filter(lit(false))
         .select(col("id").as(idCol), lit(0L).as("n_hits"),
           lit(0.0).as("score")) // id keeps the corpus key's real type
     val tfq0 = framePruned("tf", terms)
       .filter(col("term").isin(terms: _*))
     // tombstone anti-join — see searchAll; bounded by the term-pruned
     // candidate rows, not the corpus
-    val tfq = readTombstones(spark, dir, entries)
+    val tfq = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(tfq0)(t => tfq0.join(t.select("id"), Seq("id"), "left_anti"))
     val idf = dfSlice(terms)
       .withColumn("idf",
@@ -720,7 +687,7 @@ object Bm25Index {
           lit(b) * (col("dl").cast("double") / lit(avgdl))))),
       12).cast(DecimalType(30, 12))
     tfq.join(broadcast(idf.select("term", "idf")), "term")
-      .join(readFrame(spark, dir, entries, "dl").get, "id")
+      .join(IndexManifests.readFrame(spark, dir, entries, "dl").get, "id")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_hits"),
         round(sum(contrib).cast("double"), 6).as("score"))

@@ -1,7 +1,9 @@
 package graft.extra
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.ParquetRead
 
 /** Manifest-committed versions for the persisted index layouts
   * ([[Bm25Index]], [[AnnIndex]]) — the Lucene commit-point discipline,
@@ -170,8 +172,26 @@ private[graft] object IndexManifests {
 
   def requireLatest(spark: SparkSession, dir: String, what: String)
       : (Long, Map[String, Seq[String]]) =
-    latest(spark, dir).getOrElse(throw new IllegalStateException(
-      s"no committed $what index at $dir (missing _manifests)"))
+    latest(spark, dir).getOrElse(throw missing(dir, what))
+
+  /** [[requireLatest]] plus the per-file key ranges ([[latestFull]]). */
+  def requireLatestFull(spark: SparkSession, dir: String, what: String)
+      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
+    latestFull(spark, dir).getOrElse(throw missing(dir, what))
+
+  private def missing(dir: String, what: String) =
+    new IllegalStateException(
+      s"no committed $what index at $dir (missing _manifests)")
+
+  /** Read one frame as the union of its committed segments; None when
+    * the manifest lists no segment for it (e.g. no tombstones yet).
+    */
+  def readFrame(spark: SparkSession, dir: String,
+      entries: Map[String, Seq[String]], frame: String)
+      : Option[DataFrame] = {
+    val paths = entries.getOrElse(frame, Nil).map(rel => s"$dir/$rel")
+    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
+  }
 
   /** Atomic commit via put-if-absent on the FINAL name (the same
     * commit point as [[Snapshots]]' manifest commit): the exclusive

@@ -66,12 +66,6 @@ object MinhashIndex {
         r.getAs[Int]("shingle_n"))
     }
 
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    IndexManifests.latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed minhash index at $dir (missing _manifests)"))
-
   /** (id, shingles) of a doc frame under this geometry. */
   private def setsOf(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame =
@@ -167,7 +161,8 @@ object MinhashIndex {
       dir: String, txn: Option[(String, Long)] = None,
       numFiles: Int = 2, autoCompactFanout: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     if (txn.exists { case (sid, b) =>
         IndexManifests.txnApplied(entries, sid, b) }) return
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
@@ -209,7 +204,8 @@ object MinhashIndex {
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
       retainVersions: Int = 1): Boolean = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val bandSegs = entries.getOrElse("bands", Nil)
     val sizes = IndexManifests.segmentBytes(spark, dir, bandSegs)
     val pickedB = IndexManifests.pickTier(sizes, fanout)
@@ -250,8 +246,9 @@ object MinhashIndex {
     */
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1, numFiles: Int = 8): Unit = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
-    val tomb = readTombstones(spark, dir, entries)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     def readAll(frame: String) = {
       val segs = entries.getOrElse(frame, Nil)
       require(segs.nonEmpty, s"no committed $frame segments at $dir")
@@ -290,7 +287,8 @@ object MinhashIndex {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "d"): Long = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val incoming = ids.select(col(idCol).as("d")).distinct()
     val prior = entries.getOrElse("tombstones", Nil)
       .map(s => s"$dir/$s")
@@ -311,12 +309,6 @@ object MinhashIndex {
     } finally newIds.unpersist(blocking = false): Unit
   }
 
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]]): Option[DataFrame] = {
-    val paths = entries.getOrElse("tombstones", Nil).map(s => s"$dir/$s")
-    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
-  }
-
   private def parseLong(s: String): Option[Any] =
     s.toLongOption.map(java.lang.Long.valueOf(_): Any)
 
@@ -326,7 +318,8 @@ object MinhashIndex {
   private[graft] def probeBandFiles(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String)
       : (Seq[String], Int) = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
     val keys = bandsOf(setsOf(batch, idCol, textCol, shingleN),
       numPerms, rowsPerBand).select(col("k")).distinct()
@@ -357,7 +350,8 @@ object MinhashIndex {
   def dedupBatch(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.5,
       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
     val batchSets = setsOf(batch, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -402,7 +396,7 @@ object MinhashIndex {
       // widths) here — before anything downstream, so a deleted doc
       // can never anchor a verdict; the anti-join is bounded by the
       // MATCHED rows, never the corpus (see delete())
-      val matched = readTombstones(spark, dir, entries)
+      val matched = IndexManifests.readFrame(spark, dir, entries, "tombstones")
         .fold(matched0)(t =>
           matched0.join(t.select("d"), Seq("d"), "left_anti"))
       // union of matched corpus postings + batch rows: every bucket a

@@ -145,7 +145,8 @@ object SemanticIndex {
       dir: String, txn: Option[(String, Long)] = None,
       autoCompactFanout: Int = 0): Boolean = {
     val spark = batch.sparkSession
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "semantic")
     if (txn.exists { case (sid, b) =>
         IndexManifests.txnApplied(entries, sid, b) }) return false
     // an EMPTY batch must no-op (without advancing the ledger — a
@@ -178,7 +179,8 @@ object SemanticIndex {
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
       retainVersions: Int = 1): Boolean = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "semantic")
     val segs = entries.getOrElse("vectors", Nil)
     val sizes = IndexManifests.segmentBytes(spark, dir, segs)
     val picked = IndexManifests.pickTier(sizes, fanout)
@@ -203,11 +205,12 @@ object SemanticIndex {
     */
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1): Unit = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "semantic")
     val segs = entries.getOrElse("vectors", Nil)
     require(segs.nonEmpty, s"no committed vector segments at $dir")
     val live = readVectors(spark, dir, entries).get
-    val survivors = readTombstones(spark, dir, entries)
+    val survivors = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(live)(t => live.join(t.select("d"), Seq("d"), "left_anti"))
     // a FULL takedown leaves no survivors, and a partitionBy write of
     // an empty frame is a file-less directory that would poison every
@@ -246,9 +249,10 @@ object SemanticIndex {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "d"): Long = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "semantic")
     val incoming = ids.select(col(idCol).as("d")).distinct()
-    val newIds = readTombstones(spark, dir, entries)
+    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(incoming)(t =>
         incoming.join(t.select("d"), Seq("d"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -264,12 +268,6 @@ object SemanticIndex {
     } finally newIds.unpersist(blocking = false): Unit
   }
 
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]]): Option[DataFrame] = {
-    val paths = entries.getOrElse("tombstones", Nil).map(s => s"$dir/$s")
-    if (paths.isEmpty) None else Some(ParquetRead.read(spark, paths: _*))
-  }
-
   /** Union of the live segments' cluster-partitioned scans —
     * `list_id` comes back as the partition column (int), cast to
     * long; a `list_id IN (…)` filter on this frame partition-prunes
@@ -283,12 +281,6 @@ object SemanticIndex {
           col("d"), col("v"), col("nrm")))
       .reduceOption(_ unionByName _)
 
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    IndexManifests.latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed semantic index at $dir (missing _manifests)"))
-
   /** Per-NEW-document semantic verdicts against the index + batch-mates:
     * (idCol, `cluster_id`, `is_dup`, `dup_of` — smallest matching
     * lower id, null for keepers, `best_cos` — that match's rounded
@@ -298,7 +290,8 @@ object SemanticIndex {
   def dedupBatch(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       broadcastBudgetBytes: Long = 64L << 20): DataFrame = {
-    val (_, entries, _) = requireLatestFull(spark, dir)
+    val (_, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "semantic")
     val cents = readCodebook(spark, dir)
     // pinned: the assignment feeds the per-chunk touched-cluster
     // collects, the corpus probes' broadcasts, and BOTH sides of the
@@ -327,7 +320,7 @@ object SemanticIndex {
     // tombstoned docs drop out of the corpus probe (delete()): a
     // deleted doc can never anchor a verdict — bit-identical to an
     // index built without it
-    val tomb = readTombstones(spark, dir, entries)
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     val hits = (0 until numChunks).flatMap { c =>
       val probe =
         if (numChunks == 1) ba

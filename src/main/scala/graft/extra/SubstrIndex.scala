@@ -310,7 +310,8 @@ object SubstrIndex {
       positioned: DataFrame, idCol: String,
       txn: Option[(String, Long)], numFiles: Int)
       : Option[PreparedAppend] = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     if (txn.exists { case (sid, b) =>
         IndexManifests.txnApplied(entries, sid, b) }) return None
     val seg = f"grams/seg-${v0 + 1}%09d"
@@ -389,7 +390,8 @@ object SubstrIndex {
 
   private[graft] def prepareCompactTier(spark: SparkSession, dir: String,
       fanout: Int = 8): Option[PreparedTier] = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val segs = entries.getOrElse("grams", Nil)
     val sizes = IndexManifests.segmentBytes(spark, dir, segs)
     val picked = IndexManifests.pickTier(sizes, fanout)
@@ -421,7 +423,8 @@ object SubstrIndex {
     */
   private[graft] def commitPreparedTier(spark: SparkSession, dir: String,
       p: PreparedTier, retainVersions: Int = 1): Boolean = {
-    val (v1, entries, ranges) = requireLatestFull(spark, dir)
+    val (v1, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val segs = entries.getOrElse("grams", Nil)
     if (!p.picked.forall(segs.contains)) return false
     val pickedSet = p.picked.toSet
@@ -483,12 +486,6 @@ object SubstrIndex {
     prepareAppend(spark, dir, positioned, idCol, txn, numFiles)
   }
 
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    IndexManifests.latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed substr index at $dir (missing _manifests)"))
-
   /** The files [[dedupBatch]] will open for a given batch-gram frame:
     * range-bearing files survive only if some batch key falls in their
     * recorded [min, max] ([[Merge.pruneRanged]] — one broadcast range
@@ -518,7 +515,8 @@ object SubstrIndex {
   private[graft] def probePostingFiles(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String)
       : (Seq[String], Int) = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val (k, hashed) = meta(spark, dir)
     val batchKeys = Dedup.positionedGrams(batch, idCol, textCol, k,
       hashed).select(col("__g").as("g")).distinct()
@@ -533,7 +531,8 @@ object SubstrIndex {
     */
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1, numFiles: Int = 8): Unit = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val segs = entries.getOrElse("grams", Nil)
     require(segs.nonEmpty, s"no committed gram segments at $dir")
     val seg = f"grams/seg-${v0 + 1}%09d"
@@ -599,7 +598,8 @@ object SubstrIndex {
       minSpanTokens: Int, pin: DataFrame => DataFrame,
       probeCutoff: Int = 8, pinned: Boolean = false)
       : (DataFrame, DataFrame) = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val (k, hashed) = meta(spark, dir)
     val grams = pin(
       Dedup.positionedGrams(batch, idCol, textCol, k, hashed))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+import org.slf4j.LoggerFactory
 
 /** An ingest stream's background tier fold (r17, [[AnnIngest.start]]):
   * the heavy half of a fold — read the tier, rewrite one tier-up segment,
@@ -19,7 +20,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   * The thread lives as long as its query: [[boundTo]] shuts it down and
   * cancels a pending fold, with its Spark jobs, when the query
   * terminates. A dropped fold leaves only orphan files for
-  * compact/vacuum to sweep.
+  * compact/vacuum to sweep; a fold dropped because its prepare failed
+  * is logged at WARN with the cause, and the next fold starts afresh.
   */
 private[streaming] final class TierFolder[P](kind: String,
     spark: SparkSession) {
@@ -29,14 +31,19 @@ private[streaming] final class TierFolder[P](kind: String,
     val t = new Thread(r, s"graft-$kind-tier-fold"); t.setDaemon(true); t
   })
   private val pending = new AtomicReference[Future[Option[P]]]()
+  private val log = LoggerFactory.getLogger(classOf[TierFolder[_]])
 
-  /** Commit a finished background merge; a failed prepare is dropped. */
+  /** Commit a finished background merge; a failed prepare is logged and
+    * dropped. */
   def harvest(commit: P => Unit): Unit = {
     val f = pending.get()
     if (f != null && f.isDone) {
       pending.set(null)
       try f.get().foreach(commit)
-      catch { case _: ExecutionException => () }
+      catch { case e: ExecutionException =>
+        log.warn(s"$kind tier fold dropped, its prepare failed: " +
+          e.getCause, e.getCause)
+      }
     }
   }
 

@@ -163,4 +163,92 @@ class StreamingSubstrSpec extends SparkSpec {
       assert(foldThreads.isEmpty, foldThreads)
     }
   }
+
+  test("a failed background fold is logged at WARN and dropped: the " +
+      "harvesting batch commits only its append, and a later fold " +
+      "still commits") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.extra.IndexManifests
+
+    val idx = tmp("substr_foldfail_idx")
+    SubstrIndex.build(corpus, "doc_id", "text", idx, k = 5)
+    val sc = spark.sparkContext
+    // cancel every job the fold thread starts until switched off: the
+    // background prepare then throws on the fold thread
+    @volatile var failFolds = true
+    val cancelled = new AtomicInteger
+    val saboteur = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (failFolds && Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-substr-tier-fold"))) {
+          cancelled.incrementAndGet()
+          sc.cancelJob(e.jobId)
+        }
+    }
+    val warnings = new ConcurrentLinkedQueue[LogEvent]()
+    val appender = new AbstractAppender("fold-failures", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warnings.add(e.toImmutable)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.streaming.TierFolder")
+      .asInstanceOf[CoreLogger]
+    logger.addAppender(appender)
+    sc.addSparkListener(saboteur)
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, String)]
+    val q = SubstrIngest.start(mem.toDF().toDF("doc_id", "text"), idx,
+      tmp("substr_foldfail_out"), tmp("substr_foldfail_ckpt"),
+      trigger = Trigger.ProcessingTime(0), autoCompactFanout = 2)
+    var batches = 0
+    def nextBatch(): Unit = {
+      val id = 1000L + batches
+      mem.addData((id, (1 to 10).map(w => s"u${id}w$w").mkString(" ")))
+      q.processAllAvailable()
+      batches += 1
+    }
+    def manifest = {
+      val (v, e) = IndexManifests.latest(spark, idx).get
+      (v, e("grams"))
+    }
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    try {
+      while (warnings.isEmpty) {
+        if (System.nanoTime() > deadline) fail("no fold failure logged")
+        val (v0, g0) = manifest
+        nextBatch()
+        if (!warnings.isEmpty) {
+          // the batch that dropped the failed fold committed its append
+          // and nothing else
+          val (v1, g1) = manifest
+          assert(v1 == v0 + 1)
+          assert(g1.size == g0.size + 1 && g1.startsWith(g0), (g0, g1))
+        }
+      }
+      assert(cancelled.get > 0)
+      val w = warnings.peek()
+      assert(w.getLevel == Level.WARN)
+      assert(w.getMessage.getFormattedMessage.startsWith(
+        "substr tier fold dropped, its prepare failed: "))
+      assert(w.getThrown != null)
+      failFolds = false
+      val tiers0 = manifest._2.filter(_.contains("/tier-")).toSet
+      while (manifest._2.forall(s => !s.contains("/tier-") || tiers0(s))) {
+        if (System.nanoTime() > deadline) fail("no later fold committed")
+        nextBatch()
+      }
+    } finally {
+      q.stop()
+      sc.removeSparkListener(saboteur)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }
