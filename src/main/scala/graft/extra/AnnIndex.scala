@@ -49,6 +49,18 @@ import graft.util.ParquetRead
   */
 object AnnIndex {
 
+  private val Frames = Seq("codes", "tombstones")
+
+  /** One `codes/` segment: hash on `list_id` so each posting list lands
+    * in one task → one file per list, `id`-sorted within it.
+    */
+  private def writeCodes(coded: org.apache.spark.sql.DataFrame,
+      dir: String, seg: String): Unit =
+    coded.repartition(col("list_id"))
+      .sortWithinPartitions(col("list_id"), col("id"))
+      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
+      .parquet(s"$dir/$seg")
+
   /** Write a built index. One shuffle (hash on `list_id`) so each
     * posting list lands in one task → one file per list; lists are
     * sorted by `id` within files for stable reads.
@@ -59,11 +71,7 @@ object AnnIndex {
     val prev = IndexManifests.latest(spark, dir)
     val v = prev.map(_._1).getOrElse(0L) + 1
     val seg = f"codes/seg-$v%09d"
-    idx.coded
-      .repartition(col("list_id"))
-      .sortWithinPartitions(col("list_id"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
+    writeCodes(idx.coded, dir, seg)
     // `pos` persists the SEQUENCE ORDER, which is load-bearing: PQ
     // codes index centroids by position (codes/dtable entry j = j-th
     // element), and the sample codebook's order is hash-order, not cid
@@ -80,16 +88,11 @@ object AnnIndex {
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
     // the manifest commit is the atomic point; a fresh build names
     // only its own segment (a crashed previous layout's files become
-    // invisible orphans for compact to sweep). The applied-batch
-    // ledger SURVIVES the rebuild, exactly like SubstrIndex.build's
-    // and both compact paths' carry-forward: dropping it would let a
-    // crash-replayed streaming micro-batch, landing right after a
-    // corpus rebuild, find no token and re-apply its rows (ADVICE r14)
+    // invisible orphans for compact to sweep); the ledger carries
     val entries = Map("codes" -> Seq(seg)) ++
-      prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-        .map(IndexManifests.TxnFrame -> _).toMap
+      IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
     IndexManifests.commit(spark, dir, v, entries)
-    IndexManifests.vacuum(spark, dir, Seq("codes", "tombstones"))
+    IndexManifests.vacuum(spark, dir, Frames)
   }
 
   /** The driver-held half of a persisted index — both codebooks and
@@ -142,7 +145,7 @@ object AnnIndex {
       : (Long, Map[String, Seq[String]]) =
     IndexManifests.latest(spark, dir).getOrElse {
       val (fs, _) = IndexManifests.fsOf(spark, dir)
-      val legacy = Seq("codes", "tombstones")
+      val legacy = Frames
         .filter(f => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$f")))
         .map(f => f -> Seq(f)).toMap
       (0L, legacy)
@@ -196,12 +199,6 @@ object AnnIndex {
     readCodes(spark, dir, entries)
   }
 
-  /** Read a persisted index back as a lazily-scanned
-    * [[Similarity.IvfPqIndex]]: codebooks + meta are collected (tiny),
-    * `codes/` stays a union of partitioned segment scans that
-    * [[Similarity.searchIvfPq]] prunes per leg. The manifest is
-    * resolved ONCE here — the snapshot the whole search plans against.
-    */
   /** Query-by-VECTOR top-k over a persisted index — the serving call
     * a retrieval stack makes with a model-produced embedding
     * ([[Similarity.searchIvfPqVectors]] against the committed
@@ -216,9 +213,18 @@ object AnnIndex {
     Similarity.searchIvfPqVectors(readIvfPq(spark, dir), queries, k,
       nprobe, candFactor)
 
-  def readIvfPq(spark: SparkSession, dir: String): Similarity.IvfPqIndex = {
+  /** Read a persisted index back as a lazily-scanned
+    * [[Similarity.IvfPqIndex]]: codebooks + meta are collected (tiny),
+    * `codes/` stays a union of partitioned segment scans that
+    * [[Similarity.searchIvfPq]] prunes per leg. The manifest is
+    * resolved ONCE here — the snapshot the whole search plans against.
+    */
+  def readIvfPq(spark: SparkSession, dir: String): Similarity.IvfPqIndex =
+    indexOf(spark, dir, entriesOf(spark, dir)._2)
+
+  private def indexOf(spark: SparkSession, dir: String,
+      entries: Map[String, Seq[String]]): Similarity.IvfPqIndex = {
     val cb = readCodebooks(spark, dir)
-    val (_, entries) = entriesOf(spark, dir)
     val coded0 = readCodes(spark, dir, entries)
     // tombstoned ids (see delete()) drop out of every scan; the static
     // list_id IN (probed) filter searchIvfPq adds still pushes through
@@ -252,15 +258,8 @@ object AnnIndex {
     * advanced atomically with the commit — a replayed batchId is a
     * no-op (StreamingAnnSpec pins bit-identity).
     *
-    * `autoCompactFanout` (0 = off) is the ingest-side maintenance
-    * guard (r14 verdict #5, re-policied per r15 verdict #1): when a
-    * size tier of `codes/` segments reaches that many members, a
-    * SIZE-TIERED minor merge ([[compactTier]]) folds ONLY that tier —
-    * per-trigger work bounded by the tier, never the index, so a
-    * long-running ingest holds its read fan-in O(fanout · log N)
-    * without an operator in the loop and without the old
-    * threshold→full-merge policy's O(index) micro-batch stall. The
-    * ledger carries through the fold — replay safety is unchanged.
+    * `autoCompactFanout` (0 = off) runs [[compactTier]] with that
+    * fanout after the commit — the ingest-side maintenance guard.
     */
   def appendIvfPq(spark: SparkSession, dir: String,
       emb: org.apache.spark.sql.DataFrame, idCol: String,
@@ -288,23 +287,6 @@ object AnnIndex {
         s"${cb.m * cb.sub} (m=${cb.m} × sub=${cb.sub})")
     val encoded = Similarity.encodeIvfPq(emb, idCol, vecCol, cb.coarse,
       cb.pq, cb.m, cb.sub, cb.residual)
-    // Two output shapes. Default: hash on list_id — AQE coalesces the
-    // exchange to few tasks on a small batch while a backlog batch
-    // keeps parallel writers, and partitionBy writes one file per
-    // touched list either way. singleFileBatch funnels through ONE
-    // post-encode task (repartition(1) — the encode projection still
-    // parallelizes upstream of the exchange): marginally cheaper for
-    // TRICKLE batches, but measured 43µs/row at 200k-row batches vs
-    // ~26µs on the hash path, so streams that can see backlog batches
-    // should keep the default. [[compact]] folds accumulated per-batch
-    // files back into one file per list on the maintenance cadence.
-    val arranged =
-      if (singleFileBatch)
-        encoded.repartition(1)
-          .sortWithinPartitions(col("list_id"), col("id"))
-      else
-        encoded.repartition(col("list_id"))
-          .sortWithinPartitions(col("list_id"), col("id"))
     // new SEGMENT + manifest commit: the batch's files are invisible
     // to searches until the commit lands (a crashed append leaves an
     // orphan segment compact sweeps, never a torn read). writerEntries
@@ -315,102 +297,53 @@ object AnnIndex {
     // the manifest's applied-batch ledger and no-ops BEFORE writing
     // anything — the ledger commits atomically with the segment it
     // covers, so the index is bit-identical under replay.
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return
+    if (IndexManifests.txnApplied(entries, txn)) return
     val seg = f"codes/seg-${v0 + 1}%09d"
-    arranged.write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
-    val newSegs = entries.getOrElse("codes", Nil) :+ seg
-    val withSeg = entries + ("codes" -> newSegs)
-    IndexManifests.commit(spark, dir, v0 + 1,
-      txn.fold(withSeg) { case (sid, b) =>
-        IndexManifests.withTxn(withSeg, sid, b) })
+    // Two output shapes. Default: hash on list_id — AQE coalesces the
+    // exchange to few tasks on a small batch while a backlog batch
+    // keeps parallel writers, and partitionBy writes one file per
+    // touched list either way. singleFileBatch funnels through ONE
+    // post-encode task (repartition(1) — the encode projection still
+    // parallelizes upstream of the exchange): marginally cheaper for
+    // TRICKLE batches, but measured 43µs/row at 200k-row batches vs
+    // ~26µs on the hash path, so streams that can see backlog batches
+    // should keep the default. [[compact]] folds accumulated per-batch
+    // files back into one file per list on the maintenance cadence.
+    if (singleFileBatch)
+      encoded.repartition(1)
+        .sortWithinPartitions(col("list_id"), col("id"))
+        .write.mode(SaveMode.Overwrite).partitionBy("list_id")
+        .parquet(s"$dir/$seg")
+    else writeCodes(encoded, dir, seg)
+    IndexManifests.commitAppend(spark, dir, v0 + 1, entries,
+      Seq("codes" -> seg), txn)
     if (autoCompactFanout > 0)
       compactTier(spark, dir, autoCompactFanout): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the auto policy
-    * behind `autoCompactFanout`, the [[SubstrIndex.compactTier]]
-    * discipline on the dense layout): merge ONLY the first full size
-    * tier of `codes/` segments ([[IndexManifests.pickTier]]) into one
-    * tier-up `list_id`-partitioned segment — per-trigger work bounded
-    * by the tier's bytes, never the index, live segment count
-    * O(fanout · log N). Tombstones are NOT applied here (the read
-    * path's anti-join stays; only the major [[compact]] makes deletes
-    * physical) and codebooks/meta are untouched, so searches are
-    * bit-identical before and after — the merged rows land id-sorted
-    * within each list partition exactly as the inputs were. The txn
-    * ledger and tombstone frame carry through; a now-full higher tier
-    * waits for the next append's trigger. Returns true when a tier
-    * merged.
+  /** The `codes/` tier fold ([[IndexManifests.TierFold]]): the merge
+    * body re-hashes the picked segments' rows on `list_id`, id-sorted
+    * within each list exactly as the inputs were. Codebooks, meta and
+    * tombstones are untouched.
+    */
+  private[graft] val Tier = IndexManifests.TierFold("ANN", "codes", Nil,
+    Frames, (spark, dir, p) => {
+      writeCodes(p.picked("codes")
+          .map(rel => ParquetRead.read(spark, s"$dir/$rel"))
+          .reduce(_.unionByName(_)), dir, p.out("codes"))
+      Map.empty
+    })
+
+  /** Fold the first full size tier of `codes/` segments into one
+    * tier-up segment — the shared [[IndexManifests.compactTier]]
+    * lifecycle over [[Tier]], the policy behind `autoCompactFanout`.
+    * Searches are bit-identical before and after. Returns true when a
+    * tier merged. A legacy flat layout has no manifest, so this throws
+    * before writing anything; [[compact]] migrates it.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
       retainVersions: Int = 1): Boolean =
-    prepareCompactTier(spark, dir, fanout) match {
-      case None => false
-      case Some(p) => commitPreparedTier(spark, dir, p, retainVersions)
-    }
-
-  /** Phase 1 of the two-phase [[compactTier]] (r17 — the
-    * [[SubstrIndex.prepareAppend]] split applied to compaction): pick
-    * the first full size tier and WRITE the merged tier-up segment's
-    * files without committing them — invisible until
-    * [[commitPreparedTier]] lands the manifest, so a streaming ingest
-    * can run the (heavy) merge OFF the micro-batch path, concurrent
-    * with later batches, and fold it in with one cheap manifest write
-    * on the batch thread. The merged segment lives under a `tier-`
-    * name so a concurrent append's `seg-` write can never collide. A
-    * crash (or dropped prepare) leaves orphan files for
-    * [[compact]]/vacuum to sweep — the same crash shape as a failure
-    * inside the old single-phase fold.
-    */
-  private[graft] final case class PreparedTier(picked: Seq[String],
-      seg: String)
-
-  private[graft] def prepareCompactTier(spark: SparkSession, dir: String,
-      fanout: Int = 8): Option[PreparedTier] = {
-    // manifest-committed layouts only: a legacy flat layout must go
-    // through [[compact]]'s migration first (writerEntries' contract —
-    // a nested tier-up segment inside the live flat dir would corrupt
-    // partition discovery), and the auto path only ever runs after an
-    // append, which guarantees the manifest exists
-    val (v0, entries) = IndexManifests.latest(spark, dir)
-      .getOrElse(return None)
-    val segs = entries.getOrElse("codes", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, segs)
-    val picked = IndexManifests.pickTier(sizes, fanout)
-    if (picked.isEmpty) return None
-    val seg = f"codes/tier-$v0%09d"
-    picked.map(rel => ParquetRead.read(spark, s"$dir/$rel"))
-      .reduce(_.unionByName(_))
-      .repartition(col("list_id"))
-      .sortWithinPartitions(col("list_id"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
-    Some(PreparedTier(picked, seg))
-  }
-
-  /** Phase 2: swap the prepared tier into the CURRENT manifest (which
-    * may have gained append segments since phase 1 — appends only add,
-    * so the picked segments are still live; bail out without
-    * committing if any vanished, e.g. a concurrent major [[compact]]).
-    * Must run on the single writer thread (the manifest commit is
-    * put-if-absent); searches are bit-identical before and after — the
-    * merged rows land id-sorted within each list partition exactly as
-    * the inputs were, and the ledger/tombstones ride the entries map.
-    */
-  private[graft] def commitPreparedTier(spark: SparkSession, dir: String,
-      p: PreparedTier, retainVersions: Int = 1): Boolean = {
-    val (v1, entries) = IndexManifests.latest(spark, dir)
-      .getOrElse(return false)
-    val segs = entries.getOrElse("codes", Nil)
-    if (!p.picked.forall(segs.contains)) return false
-    IndexManifests.commit(spark, dir, v1 + 1,
-      entries + ("codes" -> (segs.filterNot(p.picked.toSet) :+ p.seg)))
-    IndexManifests.vacuum(spark, dir, Seq("codes", "tombstones"),
-      keepVersions = retainVersions)
-    true
-  }
+    IndexManifests.compactTier(spark, dir, Tier, fanout, retainVersions)
 
   /** Delete vectors from the index — the dense mirror of
     * [[Bm25Index.delete]], LSM-style: ids are appended to a
@@ -423,7 +356,10 @@ object AnnIndex {
     * without those rows under the same frozen codebooks (spec-pinned).
     * [[compact]] makes the purge physical. Re-adding a tombstoned id
     * via [[appendIvfPq]] requires a [[compact]] first (caller
-    * contract, as in [[Bm25Index.delete]]).
+    * contract, as in [[Bm25Index.delete]]). Ids already tombstoned
+    * are skipped, and a call with no new id commits nothing
+    * ([[IndexManifests.appendTombstones]]), so a takedown list re-run
+    * daily neither grows the frame nor advances the head.
     */
   def delete(spark: SparkSession, dir: String,
       ids: org.apache.spark.sql.DataFrame, idCol: String = "id"): Unit = {
@@ -431,20 +367,8 @@ object AnnIndex {
     // tombstones/seg-N nested inside a live flat tombstones/ dir would
     // corrupt later unions the same way a nested codes segment does
     val (v0, entries) = writerEntries(spark, dir)
-    val incoming = ids.select(col(idCol).as("id")).distinct()
-    // drop ids already tombstoned — a takedown job that re-runs its
-    // full list daily (the natural idempotent retry) would otherwise
-    // grow the frame linearly with RUNS, and every search's anti-join
-    // pays for the duplicates until a compact (Bm25Index.delete
-    // already dedups; this is its dense mirror)
-    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
-      .fold(incoming)(t =>
-        incoming.join(t.select("id"), Seq("id"), "left_anti"))
-    val seg = f"tombstones/seg-${v0 + 1}%09d"
-    newIds.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/$seg")
-    IndexManifests.commit(spark, dir, v0 + 1, entries +
-      ("tombstones" -> (entries.getOrElse("tombstones", Nil) :+ seg)))
+    IndexManifests.appendTombstones(spark, dir, v0, entries, Map.empty,
+      ids.select(col(idCol).as("id")).distinct(), "id"): Unit
   }
 
   /** Index maintenance — BOTH halves of the LSM story:
@@ -485,22 +409,14 @@ object AnnIndex {
     val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     val live0 = readCodes(spark, dir, entries)
     val seg = f"codes/seg-${v0 + 1}%09d"
-    tomb.fold(live0)(t => live0.join(t, Seq("id"), "left_anti"))
-      .repartition(col("list_id"))
-      .sortWithinPartitions(col("list_id"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
+    writeCodes(tomb.fold(live0)(t => live0.join(t, Seq("id"), "left_anti")),
+      dir, seg)
     // the commit is the swap: one fresh segment, no tombstones;
     // superseded segments outside the retention window (and any
     // crashed writer's orphans) are then dropped physically
-    // the applied-batch ledger survives maintenance: dropping it here
-    // would let a crash-replayed micro-batch right after a compact
-    // re-apply its rows
-    val fresh = Map("codes" -> Seq(seg)) ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v0 + 1, fresh)
-    IndexManifests.vacuum(spark, dir, Seq("codes", "tombstones"),
+    IndexManifests.commit(spark, dir, v0 + 1,
+      Map("codes" -> Seq(seg)) ++ IndexManifests.ledgerOf(entries))
+    IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }
 
@@ -523,15 +439,8 @@ object AnnIndex {
     * only the segment set is versioned).
     */
   def readIvfPqAt(spark: SparkSession, dir: String,
-      version: Long): Similarity.IvfPqIndex = {
-    val cb = readCodebooks(spark, dir)
-    val entries = IndexManifests.at(spark, dir, version)
-    val coded0 = readCodes(spark, dir, entries)
-    val coded = IndexManifests.readFrame(spark, dir, entries, "tombstones")
-      .fold(coded0)(t => coded0.join(t, Seq("id"), "left_anti"))
-    Similarity.IvfPqIndex(cb.coarse, cb.pq, cb.m, cb.sub, coded,
-      cb.residual)
-  }
+      version: Long): Similarity.IvfPqIndex =
+    indexOf(spark, dir, IndexManifests.at(spark, dir, version))
 
   /** Build-and-persist in one call; returns the read-back index. */
   def buildAndWriteIvfPq(emb: org.apache.spark.sql.DataFrame,

@@ -37,6 +37,10 @@ import graft.util.ParquetRead
   *   - `meta/seg-N/` — one row (n_docs, sum_dl) per segment: the only
   *     scalars scoring needs. Reading them replaces both eager driver
   *     actions.
+  *   - `tf/tier-N/`, `dl/tier-N/`, `df/tier-N/`, `meta/tier-N/` — the
+  *     same four frames as written by a tier fold ([[compactTier]]),
+  *     N being the head version the fold was picked at; readers treat
+  *     them like any `seg-N`.
   *   - `tombstones/seg-N/` — (id, n, s), present only after a
   *     [[delete]]: ids the searches anti-join out until [[compact]]
   *     makes the deletion physical (Lucene-style deferred purge).
@@ -160,8 +164,8 @@ object Bm25Index {
     // micro-batch whose batchId is already in the manifest's applied-
     // batch ledger no-ops before any tokenization or write — see
     // [[IndexManifests.txnApplied]]
-    if (txn.exists { case (sid, b) => IndexManifests.txnApplied(
-        prev.map(_._2).getOrElse(Map.empty), sid, b) }) return
+    if (IndexManifests.txnApplied(prev.map(_._2).getOrElse(Map.empty), txn))
+      return
     // Append EXTENDS the committed index: on a dir that HOLDS SEGMENT
     // DATA but no manifest (a pre-manifest legacy layout), prev=None
     // would yield base=empty and commit a manifest naming ONLY the new
@@ -220,8 +224,7 @@ object Bm25Index {
       // tombstones + the txn ledger carry across appends; an
       // overwrite starts clean
       base.get("tombstones").map("tombstones" -> _).toMap ++
-      base.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
+      IndexManifests.ledgerOf(base)
     // per-file term ranges of the new tf/df segments ride the commit
     // (the r15 SubstrIndex discipline): searches prune file lists from
     // the manifest alone, zero footer opens on the serving path.
@@ -234,8 +237,7 @@ object Bm25Index {
       (if (mode == SaveMode.Append) prevRanges
        else Map.empty[String, (String, String)]) ++ segRanges
     IndexManifests.commit(spark, dir, v,
-      txn.fold(entries) { case (sid, b) =>
-        IndexManifests.withTxn(entries, sid, b) }, ranges)
+      IndexManifests.withTxn(entries, txn), ranges)
     if (mode == SaveMode.Overwrite && prev.nonEmpty)
       IndexManifests.dropOrphanSegments(spark, dir, Frames, entries)
   }
@@ -256,91 +258,54 @@ object Bm25Index {
       txn: Option[(String, Long)] = None,
       autoCompactFanout: Int = 0): Unit = {
     build(docs, idCol, textCol, dir, numFiles, SaveMode.Append, txn)
-    // ingest-side maintenance guard (r14 verdict #5, re-policied per
-    // r15 verdict #1): SIZE-TIERED minor merge when a tf size tier
-    // fills — work bounded by the tier, never the index; the ledger
-    // carries through, so replay safety is unchanged
+    // ingest-side maintenance guard (see compactTier)
     if (autoCompactFanout > 0)
       compactTier(docs.sparkSession, dir, autoCompactFanout): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the
-    * [[SubstrIndex.compactTier]] policy on the four-frame BM25
-    * layout): pick the first full size tier of TF segments
-    * ([[IndexManifests.pickTier]]) and structurally merge them —
-    * together with the SAME-VERSION dl/df/meta segments (every
-    * build/append commits the four under one seg-N) — into one
-    * tier-up segment per frame: tf/dl rows re-clustered plain, df
-    * partials summed WITHIN the tier (still partial vs the unpicked
-    * segments — readers sum across segments either way), meta
-    * partials summed likewise. Tombstones are NOT applied (their
-    * df/meta corrections stay deferred to the major [[compact]],
-    * which owns the id-keyed correction pass), so searches are
-    * bit-identical before and after. Per-trigger work is bounded by
-    * the tier's bytes, never the index; ledger and tombstones carry.
-    * Returns true when a tier merged.
+  /** The four-frame tier fold ([[IndexManifests.TierFold]]): `tf`
+    * leads and the same-named `dl`/`df`/`meta` segments fold alongside
+    * (every build/append commits the four under one name). The merge
+    * body re-clusters tf/dl rows plain and sums the df and meta
+    * partials WITHIN the tier — still partials against the unpicked
+    * segments, which readers sum across either way — then returns the
+    * tf/df tier-up files' term ranges. Tombstones stay deferred to
+    * [[compact]], which owns the id-keyed df correction.
+    */
+  private[graft] val Tier = IndexManifests.TierFold("BM25", "tf",
+    Seq("dl", "df", "meta"), Frames, (spark, dir, p) => {
+      import spark.implicits._
+      def read(frame: String): Option[DataFrame] = p.picked.get(frame)
+        .map(segs => ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*))
+      val small = math.max(1, p.files / 4)
+      read("tf").foreach(d => Layout.writeClustered(d,
+        s"$dir/${p.out("tf")}", Seq(col("term"), col("id")), p.files))
+      read("dl").foreach(d => Layout.writeClustered(d,
+        s"$dir/${p.out("dl")}", Seq(col("id")), small))
+      read("df").foreach(d => Layout.writeClustered(
+        d.groupBy(col("term")).agg(sum(col("df")).as("df")),
+        s"$dir/${p.out("df")}", Seq(col("term")), small))
+      read("meta").foreach { m =>
+        val r = m.agg(coalesce(sum("n_docs"), lit(0L)),
+          coalesce(sum("sum_dl"), lit(0L))).head()
+        Seq((r.getLong(0), r.getLong(1))).toDF("n_docs", "sum_dl")
+          .coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(s"$dir/${p.out("meta")}")
+      }
+      Seq("tf", "df").filter(p.picked.contains).map(f =>
+        IndexManifests.fileRangeStats(spark, dir, p.out(f), "term"))
+        .reduce(_ ++ _)
+    })
+
+  /** Fold the first full size tier of tf segments, with their
+    * dl/df/meta companions, into one tier-up segment per frame — the
+    * shared [[IndexManifests.compactTier]] lifecycle over [[Tier]],
+    * the policy behind `autoCompactFanout`. Searches are bit-identical
+    * before and after. Returns true when a tier merged.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean = {
-    import spark.implicits._
-    val (v0, entries, ranges) =
-      IndexManifests.requireLatestFull(spark, dir, "BM25")
-    val tfSegs = entries.getOrElse("tf", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, tfSegs)
-    val pickedTf = IndexManifests.pickTier(sizes, fanout)
-    if (pickedTf.isEmpty) return false
-    // tf/seg-N → the same version's dl/df/meta segments
-    val versionsPicked = pickedTf.map(_.stripPrefix("tf/"))
-    def pickedOf(frame: String): Seq[String] = {
-      val live = entries.getOrElse(frame, Nil).toSet
-      versionsPicked.map(v => s"$frame/$v").filter(live.contains)
-    }
-    val companions = Seq("dl", "df", "meta").flatMap(pickedOf)
-    val pickedAll = (pickedTf ++ companions).toSet
-    // size the tier-up file count from EVERYTHING this merge rewrites
-    // — tf plus the same-version dl/df/meta companions (sizes covers
-    // tf only; the companions need their own stat pass)
-    val bytes = sizes.collect { case (s, b) if pickedAll(s) => b }.sum +
-      IndexManifests.segmentBytes(spark, dir, companions).map(_._2).sum
-    val nf = IndexManifests.tierFileCount(bytes)
-    val v = v0 + 1
-    val seg = f"seg-$v%09d"
-    def readPicked(frame: String): Option[DataFrame] = {
-      val p = pickedOf(frame)
-      if (p.isEmpty) None
-      else Some(ParquetRead.read(spark, p.map(s => s"$dir/$s"): _*))
-    }
-    Layout.writeClustered(
-      ParquetRead.read(spark, pickedTf.map(s => s"$dir/$s"): _*),
-      s"$dir/tf/$seg", Seq(col("term"), col("id")), nf)
-    readPicked("dl").foreach(d => Layout.writeClustered(d,
-      s"$dir/dl/$seg", Seq(col("id")), math.max(1, nf / 4)))
-    readPicked("df").foreach(d => Layout.writeClustered(
-      d.groupBy(col("term")).agg(sum(col("df")).as("df")),
-      s"$dir/df/$seg", Seq(col("term")), math.max(1, nf / 4)))
-    readPicked("meta").foreach { m =>
-      val r = m.agg(coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("sum_dl"), lit(0L))).head()
-      Seq((r.getLong(0), r.getLong(1))).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/meta/$seg")
-    }
-    val fresh = entries ++ Seq("tf", "dl", "df", "meta").map { f =>
-      val merged =
-        if (f == "tf" || pickedOf(f).nonEmpty) Seq(s"$f/$seg") else Nil
-      f -> (entries.getOrElse(f, Nil).filterNot(pickedAll) ++ merged)
-    }.toMap
-    val segRanges =
-      IndexManifests.fileRangeStats(spark, dir, s"tf/$seg", "term") ++
-        (if (pickedOf("df").isEmpty) Map.empty
-         else IndexManifests.fileRangeStats(spark, dir, s"df/$seg",
-           "term"))
-    val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedAll)
-    IndexManifests.commit(spark, dir, v, fresh, keptRanges ++ segRanges)
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+      retainVersions: Int = 1): Boolean =
+    IndexManifests.compactTier(spark, dir, Tier, fanout, retainVersions)
 
   /** Delete documents from the index — the takedown mirror of
     * [[graft.extra.Merge.delete]] for the sparse arm, LSM-style (the
@@ -496,12 +461,8 @@ object Bm25Index {
     Seq((mN, mS)).toDF("n_docs", "sum_dl")
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$dir/meta/$seg")
-    // the applied-batch ledger survives maintenance (see
-    // [[AnnIndex.compact]]'s matching carry-forward)
     val fresh = Seq("tf", "dl", "df", "meta").map(f => f -> Seq(s"$f/$seg"))
-      .toMap ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
+      .toMap ++ IndexManifests.ledgerOf(entries)
     // fresh per-file term stats for the merged segments — pruning
     // sharpens back up across the full term space with the layout
     val freshRanges =

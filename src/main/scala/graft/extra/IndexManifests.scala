@@ -1,12 +1,13 @@
 package graft.extra
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.util.ParquetRead
 
-/** Manifest-committed versions for the persisted index layouts
-  * ([[Bm25Index]], [[AnnIndex]]) — the Lucene commit-point discipline,
+/** Manifest-committed versions for the five persisted index layouts
+  * ([[Bm25Index]], [[AnnIndex]], [[SubstrIndex]], [[MinhashIndex]],
+  * [[SemanticIndex]]) — the Lucene commit-point discipline,
   * shared: a manifest file `_manifests/vN.txt` holds one
   * `frame<TAB>segment-relpath` line per live segment, committed by a
   * CREATE-FAILS-IF-EXISTS on the version number (a true CAS even on
@@ -16,7 +17,9 @@ import graft.util.ParquetRead
   * invisible until its commit lands — snapshot isolation for
   * multi-file, non-atomic index writes. Single writer at a time is the
   * caller's contract; the CAS turns a writer race into an error, never
-  * a clobbered manifest.
+  * a clobbered manifest. Every index folds its segments through one
+  * size-tiered lifecycle: [[prepareTier]] then [[commitTier]] over the
+  * index's [[TierFold]].
   */
 private[graft] object IndexManifests {
 
@@ -281,6 +284,11 @@ private[graft] object IndexManifests {
     }
   }
 
+  /** [[txnApplied]] for an optional `(streamId, batchId)`. */
+  def txnApplied(entries: Map[String, Seq[String]],
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (sid, b) => txnApplied(entries, sid, b) }
+
   /** Entries with this stream's ledger token replaced by `batchId`
     * (one token per stream — the ledger is O(#streams), not
     * O(#batches)).
@@ -293,6 +301,21 @@ private[graft] object IndexManifests {
     }
     entries + (TxnFrame -> (kept :+ s"$streamId:$batchId"))
   }
+
+  /** [[withTxn]] for an optional token; None leaves `entries` as is. */
+  def withTxn(entries: Map[String, Seq[String]],
+      txn: Option[(String, Long)]): Map[String, Seq[String]] =
+    txn.fold(entries) { case (sid, b) => withTxn(entries, sid, b) }
+
+  /** An append's commit: `entries` plus each `(frame, segment)` of
+    * `added`, with `txn`'s token in the same atomic write. */
+  def commitAppend(spark: SparkSession, dir: String, version: Long,
+      entries: Map[String, Seq[String]], added: Seq[(String, String)],
+      txn: Option[(String, Long)],
+      ranges: Map[String, (String, String)] = Map.empty): Unit =
+    commit(spark, dir, version, withTxn(entries ++ added.map {
+      case (f, seg) => f -> (entries.getOrElse(f, Nil) :+ seg)
+    }, txn), ranges)
 
   /** An EMPTY data file's recorded range — min > max under both the
     * string and decimal-long orderings, so any range probe always
@@ -388,7 +411,7 @@ private[graft] object IndexManifests {
     * HDFS-likes). Live segment count is O(fanout · log N) under the
     * tiered policy, so the per-append stat pass is bounded metadata.
     */
-  private[graft] def segmentBytes(spark: SparkSession, dir: String,
+  private def segmentBytes(spark: SparkSession, dir: String,
       segs: Seq[String]): Seq[(String, Long)] = {
     val (fs, _) = fsOf(spark, dir)
     segs.map { s =>
@@ -459,10 +482,9 @@ private[graft] object IndexManifests {
 
   /** Range stats surviving a tier merge: drop every `#range=` file
     * entry living under a merged-away segment (the tier-up segment
-    * commits fresh stats) — shared by every compactTier so the
-    * dropping rule can't silently diverge across the indexes.
+    * commits fresh stats, [[commitTier]]).
     */
-  private[graft] def dropRangesUnder(
+  private def dropRangesUnder(
       ranges: Map[String, (String, String)],
       merged: Set[String]): Map[String, (String, String)] =
     ranges.filter { case (f, _) =>
@@ -477,6 +499,116 @@ private[graft] object IndexManifests {
   private[graft] def tierFileCount(inputBytes: Long): Int =
     math.max(1L, math.min(16L,
       (inputBytes + (96L << 20) - 1) / (96L << 20))).toInt
+
+  /** One index's size-tiered fold, the LSM minor merge behind its
+    * `compactTier` and `autoCompactFanout`. [[pickTier]] runs over the
+    * `lead` frame; each `companions` frame folds its same-named
+    * segments alongside (a write commits one name across its frames);
+    * `frames` is the vacuum set. `merge` is the index's body: write
+    * `p.out(f)` for each frame `f` of `p.picked` from its picked
+    * segments in `p.files` files, return those files' `#range=` stats,
+    * and leave reads bit-identical (tombstones stay for `compact`).
+    */
+  private[graft] final case class TierFold(what: String, lead: String,
+      companions: Seq[String], frames: Seq[String],
+      merge: (SparkSession, String, PreparedTier) =>
+        Map[String, (String, String)])
+
+  /** A written, uncommitted tier merge, picked at head `version`. Its
+    * tier-up segments are `<frame>/tier-<version>`, a name no append
+    * (`seg-`) or later prepare (a newer head) can take.
+    */
+  private[graft] final case class PreparedTier(version: Long,
+      picked: Map[String, Seq[String]], files: Int,
+      ranges: Map[String, (String, String)] = Map.empty) {
+    def out(frame: String): String = f"$frame/tier-$version%09d"
+  }
+
+  /** Phase 1: pick the lead frame's first full size tier (None when
+    * none is full), add the companions' same-named segments, size the
+    * output from every picked byte and run the merge body. Commits
+    * nothing, so it may run off the writer thread
+    * ([[graft.streaming.TierFolder]]); a dropped prepare leaves orphan
+    * files for [[vacuum]].
+    */
+  private[graft] def prepareTier(spark: SparkSession, dir: String,
+      tier: TierFold, fanout: Int): Option[PreparedTier] = {
+    val (v0, entries) = requireLatest(spark, dir, tier.what)
+    val sizes = segmentBytes(spark, dir, entries.getOrElse(tier.lead, Nil))
+    val lead = pickTier(sizes, fanout)
+    if (lead.isEmpty) return None
+    val names = lead.map(_.stripPrefix(s"${tier.lead}/"))
+    val companions = tier.companions.map { f =>
+      val live = entries.getOrElse(f, Nil).toSet
+      f -> names.map(n => s"$f/$n").filter(live)
+    }.filter(_._2.nonEmpty)
+    val leadSet = lead.toSet
+    val bytes = sizes.collect { case (s, b) if leadSet(s) => b }.sum +
+      segmentBytes(spark, dir, companions.flatMap(_._2)).map(_._2).sum
+    val p = PreparedTier(v0, ((tier.lead -> lead) +: companions).toMap,
+      tierFileCount(bytes))
+    Some(p.copy(ranges = tier.merge(spark, dir, p)))
+  }
+
+  /** Phase 2, on the writer thread: swap the prepared tier into the
+    * CURRENT head (appends since phase 1 carry through, as do the
+    * other frames and the ledger); the picked segments' range stats
+    * drop and the tier-up files' land. False, committing nothing, when
+    * a picked segment is gone (a major compact landed in between).
+    */
+  private[graft] def commitTier(spark: SparkSession, dir: String,
+      tier: TierFold, p: PreparedTier, retainVersions: Int = 1)
+      : Boolean = {
+    val (v1, entries, ranges) = latestFull(spark, dir).getOrElse(return false)
+    if (!p.picked.forall { case (f, segs) =>
+        segs.forall(entries.getOrElse(f, Nil).contains) }) return false
+    val gone = p.picked.values.flatten.toSet
+    commit(spark, dir, v1 + 1, entries ++ p.picked.keys.map { f =>
+      f -> (entries.getOrElse(f, Nil).filterNot(gone) :+ p.out(f))
+    }, dropRangesUnder(ranges, gone) ++ p.ranges)
+    vacuum(spark, dir, tier.frames, keepVersions = retainVersions)
+    true
+  }
+
+  /** Both phases back to back: every index's `compactTier`. */
+  private[graft] def compactTier(spark: SparkSession, dir: String,
+      tier: TierFold, fanout: Int, retainVersions: Int): Boolean =
+    prepareTier(spark, dir, tier, fanout)
+      .exists(commitTier(spark, dir, tier, _, retainVersions))
+
+  /** The ledger of `entries` alone, which a build or major compact
+    * carries into its fresh manifest (so a replayed batch still
+    * no-ops).
+    */
+  def ledgerOf(entries: Map[String, Seq[String]])
+      : Map[String, Seq[String]] =
+    entries.get(TxnFrame).map(TxnFrame -> _).toMap
+
+  /** The tombstoning deletes' tail: `incoming`'s `key` ids not yet in
+    * the `tombstones` frame land in `tombstones/seg-<v0+1>`, committed
+    * with `ranges` carried. No new id commits nothing. Returns the
+    * number of newly tombstoned ids.
+    */
+  private[graft] def appendTombstones(spark: SparkSession, dir: String,
+      v0: Long, entries: Map[String, Seq[String]],
+      ranges: Map[String, (String, String)], incoming: DataFrame,
+      key: String): Long = {
+    val newIds = readFrame(spark, dir, entries, "tombstones")
+      .fold(incoming)(t =>
+        incoming.join(t.select(key), Seq(key), "left_anti"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = newIds.count()
+      if (n > 0) {
+        val seg = f"tombstones/seg-${v0 + 1}%09d"
+        newIds.coalesce(1).write.mode(SaveMode.Overwrite)
+          .parquet(s"$dir/$seg")
+        commitAppend(spark, dir, v0 + 1, entries, Seq("tombstones" -> seg),
+          None, ranges)
+      }
+      n
+    } finally newIds.unpersist(blocking = false): Unit
+  }
 
   /** STATIC range-cluster routing for a uniform-HASH LongType key
     * (r17, VERDICT r16 #5 — remove repartitionByRange's sampling pass

@@ -5,8 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Operational introspection over any [[IndexManifests]]-committed
   * index layout (BM25 / ANN / MinHash / substring / semantic — the
   * layouts share the manifest discipline, so one reader serves all
-  * five): the per-segment size ladder the tiered auto-compaction
-  * ([[IndexManifests.pickTier]]) is tuned by, plus the exactly-once
+  * five): the per-segment size ladder the shared tier fold
+  * ([[IndexManifests.prepareTier]], whose tier-ups show as
+  * `<frame>/tier-N`) is tuned by, plus the exactly-once
   * ledger state, as a plain DataFrame an operator can query, join, or
   * alert on. Driver FS metadata only — one manifest read + one
   * content-summary stat per live segment (O(fanout · log N) under the

@@ -142,8 +142,7 @@ object MinhashIndex {
           .coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(s"$dir/meta")
       val entries = Map("bands" -> Seq(segB), "sets" -> Seq(segS)) ++
-        prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-          .map(IndexManifests.TxnFrame -> _).toMap
+        IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
       IndexManifests.commit(spark, dir, v, entries, ranges)
       IndexManifests.vacuum(spark, dir, Frames)
     } finally sets.unpersist(blocking = false): Unit
@@ -152,10 +151,8 @@ object MinhashIndex {
   /** LSM-append a batch (normally the docs curation KEPT — see the
     * ingest-order contract): one shingle pass, two clustered segment
     * writes, one manifest commit; `txn` is the exactly-once ledger,
-    * `autoCompactFanout` the ingest-side maintenance guard — a
-    * SIZE-TIERED minor merge ([[compactTier]]) when a bands size tier
-    * fills, work bounded by the tier, never the index; ledger carries
-    * through.
+    * `autoCompactFanout` (0 = off) the [[compactTier]] fanout run
+    * after the commit.
     */
   def append(batch: DataFrame, idCol: String, textCol: String,
       dir: String, txn: Option[(String, Long)] = None,
@@ -163,8 +160,7 @@ object MinhashIndex {
     val spark = batch.sparkSession
     val (v0, entries, ranges) =
       IndexManifests.requireLatestFull(spark, dir, "minhash")
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return
+    if (IndexManifests.txnApplied(entries, txn)) return
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
     val segB = f"bands/seg-${v0 + 1}%09d"
     val segS = f"sets/seg-${v0 + 1}%09d"
@@ -175,68 +171,37 @@ object MinhashIndex {
         writeClusteredSeg(bandsOf(sets, numPerms, rowsPerBand), dir,
           segB, "k", numFiles) ++
           writeClusteredSeg(sets, dir, segS, "d", numFiles)
-      val newBands = entries.getOrElse("bands", Nil) :+ segB
-      val withSegs = entries +
-        ("bands" -> newBands) +
-        ("sets" -> (entries.getOrElse("sets", Nil) :+ segS))
-      IndexManifests.commit(spark, dir, v0 + 1,
-        txn.fold(withSegs) { case (sid, b) =>
-          IndexManifests.withTxn(withSegs, sid, b) },
-        ranges ++ segRanges)
+      IndexManifests.commitAppend(spark, dir, v0 + 1, entries,
+        Seq("bands" -> segB, "sets" -> segS), txn, ranges ++ segRanges)
       if (autoCompactFanout > 0)
         compactTier(spark, dir, autoCompactFanout): Unit
     } finally sets.unpersist(blocking = false): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the
-    * [[SubstrIndex.compactTier]] policy on the band-index layout):
-    * pick the first full size tier of BANDS segments
-    * ([[IndexManifests.pickTier]]) and merge them — together with the
-    * SAME-VERSION sets segments (append and build always commit the
-    * pair under one seg-N, so the frames tier in lockstep) — into one
-    * tier-up clustered segment per frame. Rows are plain (no partial
-    * merge), tombstones are NOT applied (the probe-path anti-join
-    * stays; only the major [[compact]] makes deletes physical), the
-    * ledger carries, merged-away files' `#range=` stats drop and the
-    * tier-up segments commit fresh ones. Per-trigger work is bounded
-    * by the tier's bytes, never the index. Returns true when a tier
+  /** The band-index tier fold ([[IndexManifests.TierFold]]): `bands`
+    * leads and the same-named `sets` segments fold alongside (append
+    * and build commit the pair under one name); the merge body
+    * re-clusters each frame's picked rows into one tier-up segment
+    * and returns their `#range=` stats.
+    */
+  private[graft] val Tier = IndexManifests.TierFold("minhash", "bands",
+    Seq("sets"), Frames, (spark, dir, p) =>
+      Seq("bands" -> "k", "sets" -> "d").collect {
+        case (f, key) if p.picked.contains(f) =>
+          writeClusteredSeg(ParquetRead.read(spark,
+            p.picked(f).map(s => s"$dir/$s"): _*), dir, p.out(f), key,
+            p.files)
+      }.reduce(_ ++ _))
+
+  /** Fold the first full size tier of band segments, with their sets,
+    * into one tier-up segment per frame — the shared
+    * [[IndexManifests.compactTier]] lifecycle over [[Tier]], the
+    * policy behind `autoCompactFanout`. Returns true when a tier
     * merged.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean = {
-    val (v0, entries, ranges) =
-      IndexManifests.requireLatestFull(spark, dir, "minhash")
-    val bandSegs = entries.getOrElse("bands", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, bandSegs)
-    val pickedB = IndexManifests.pickTier(sizes, fanout)
-    if (pickedB.isEmpty) return false
-    val setSegs = entries.getOrElse("sets", Nil).toSet
-    val pickedS = pickedB.map(_.replaceFirst("^bands/", "sets/"))
-      .filter(setSegs.contains)
-    val pickedSet = (pickedB ++ pickedS).toSet
-    val bytes =
-      sizes.collect { case (s, b) if pickedSet(s) => b }.sum +
-        IndexManifests.segmentBytes(spark, dir, pickedS).map(_._2).sum
-    val nf = IndexManifests.tierFileCount(bytes)
-    val segB = f"bands/seg-${v0 + 1}%09d"
-    val segS = f"sets/seg-${v0 + 1}%09d"
-    def readSegs(segs: Seq[String]) =
-      ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*)
-    val segRanges =
-      writeClusteredSeg(readSegs(pickedB), dir, segB, "k", nf) ++
-        (if (pickedS.isEmpty) Map.empty
-         else writeClusteredSeg(readSegs(pickedS), dir, segS, "d", nf))
-    val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedSet)
-    val fresh = entries +
-      ("bands" -> (bandSegs.filterNot(pickedSet) :+ segB)) +
-      ("sets" -> (entries.getOrElse("sets", Nil).filterNot(pickedSet) ++
-        (if (pickedS.isEmpty) Nil else Seq(segS))))
-    IndexManifests.commit(spark, dir, v0 + 1, fresh,
-      keptRanges ++ segRanges)
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+      retainVersions: Int = 1): Boolean =
+    IndexManifests.compactTier(spark, dir, Tier, fanout, retainVersions)
 
   /** Re-cluster both frames into one segment each (rows are plain —
     * no partial merge needed), making tombstoned deletes PHYSICAL
@@ -260,10 +225,9 @@ object MinhashIndex {
     val ranges =
       writeClusteredSeg(readAll("bands"), dir, segB, "k", numFiles) ++
         writeClusteredSeg(readAll("sets"), dir, segS, "d", numFiles)
-    val fresh = Map("bands" -> Seq(segB), "sets" -> Seq(segS)) ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v0 + 1, fresh, ranges)
+    IndexManifests.commit(spark, dir, v0 + 1,
+      Map("bands" -> Seq(segB), "sets" -> Seq(segS)) ++
+        IndexManifests.ledgerOf(entries), ranges)
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }
@@ -289,24 +253,8 @@ object MinhashIndex {
       idCol: String = "d"): Long = {
     val (v0, entries, ranges) =
       IndexManifests.requireLatestFull(spark, dir, "minhash")
-    val incoming = ids.select(col(idCol).as("d")).distinct()
-    val prior = entries.getOrElse("tombstones", Nil)
-      .map(s => s"$dir/$s")
-    val newIds = (if (prior.isEmpty) incoming
-      else incoming.join(ParquetRead.read(spark, prior: _*).select("d"),
-        Seq("d"), "left_anti"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nNew = newIds.count()
-      if (nNew == 0) return 0L
-      val seg = f"tombstones/seg-${v0 + 1}%09d"
-      newIds.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/$seg")
-      IndexManifests.commit(spark, dir, v0 + 1, entries +
-        ("tombstones" -> (entries.getOrElse("tombstones", Nil) :+ seg)),
-        ranges)
-      nNew
-    } finally newIds.unpersist(blocking = false): Unit
+    IndexManifests.appendTombstones(spark, dir, v0, entries, ranges,
+      ids.select(col(idCol).as("d")).distinct(), "d")
   }
 
   private def parseLong(s: String): Option[Any] =

@@ -110,8 +110,7 @@ object SemanticIndex {
     val seg = f"vectors/seg-$v%09d"
     writeSegment(assign(emb, idCol, vecCol, cents), dir, seg)
     val entries = Map("vectors" -> Seq(seg)) ++
-      prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-        .map(IndexManifests.TxnFrame -> _).toMap
+      IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
     IndexManifests.commit(spark, dir, v, entries)
     IndexManifests.vacuum(spark, dir, Frames)
   }
@@ -147,8 +146,7 @@ object SemanticIndex {
     val spark = batch.sparkSession
     val (v0, entries, _) =
       IndexManifests.requireLatestFull(spark, dir, "semantic")
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return false
+    if (IndexManifests.txnApplied(entries, txn)) return false
     // an EMPTY batch must no-op (without advancing the ledger — a
     // replay re-lands here and no-ops again): a partitionBy write of
     // an empty frame produces a file-less directory whose committed
@@ -159,44 +157,33 @@ object SemanticIndex {
     val cents = readCodebook(spark, dir)
     val seg = f"vectors/seg-${v0 + 1}%09d"
     writeSegment(assign(batch, idCol, vecCol, cents), dir, seg)
-    val newSegs = entries.getOrElse("vectors", Nil) :+ seg
-    val withSeg = entries + ("vectors" -> newSegs)
-    IndexManifests.commit(spark, dir, v0 + 1,
-      txn.fold(withSeg) { case (sid, b) =>
-        IndexManifests.withTxn(withSeg, sid, b) })
+    IndexManifests.commitAppend(spark, dir, v0 + 1, entries,
+      Seq("vectors" -> seg), txn)
     if (autoCompactFanout > 0)
       compactTier(spark, dir, autoCompactFanout): Unit
     true
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the
-    * [[AnnIndex.compactTier]] policy on the cluster-partitioned
-    * vector layout): merge ONLY the first full size tier of vector
-    * segments into one tier-up `list_id`-partitioned segment — work
-    * bounded by the tier's bytes, never the index; the ledger and
-    * every other frame carry through. Returns true when a tier
-    * merged. [[compact]] stays the manual full merge.
+  /** The `vectors/` tier fold ([[IndexManifests.TierFold]]): the merge
+    * body re-writes the picked segments' rows as one tier-up
+    * `list_id`-partitioned segment.
+    */
+  private[graft] val Tier = IndexManifests.TierFold("semantic", "vectors",
+    Nil, Frames, (spark, dir, p) => {
+      writeSegment(p.picked("vectors")
+          .map(s => ParquetRead.read(spark, s"$dir/$s"))
+          .reduce(_ unionByName _), dir, p.out("vectors"))
+      Map.empty
+    })
+
+  /** Fold the first full size tier of vector segments into one tier-up
+    * segment — the shared [[IndexManifests.compactTier]] lifecycle
+    * over [[Tier]], the policy behind `autoCompactFanout`. Returns true
+    * when a tier merged. [[compact]] stays the manual full merge.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean = {
-    val (v0, entries, _) =
-      IndexManifests.requireLatestFull(spark, dir, "semantic")
-    val segs = entries.getOrElse("vectors", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, segs)
-    val picked = IndexManifests.pickTier(sizes, fanout)
-    if (picked.isEmpty) return false
-    val pickedSet = picked.toSet
-    val seg = f"vectors/seg-${v0 + 1}%09d"
-    writeSegment(
-      picked.map(s => ParquetRead.read(spark, s"$dir/$s"))
-        .reduce(_ unionByName _),
-      dir, seg)
-    IndexManifests.commit(spark, dir, v0 + 1,
-      entries + ("vectors" -> (segs.filterNot(pickedSet) :+ seg)))
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+      retainVersions: Int = 1): Boolean =
+    IndexManifests.compactTier(spark, dir, Tier, fanout, retainVersions)
 
   /** Merge accumulated segments into one (rows are plain — no partial
     * merge), tombstoned deletes made PHYSICAL (rows dropped, the
@@ -219,17 +206,14 @@ object SemanticIndex {
     // vectors frame instead; dedupBatch/append handle the empty index
     // (everything is a keeper / the next append re-seeds segments)
     val fresh: Map[String, Seq[String]] =
-      if (survivors.isEmpty)
-        entries.get(IndexManifests.TxnFrame)
-          .map(IndexManifests.TxnFrame -> _).toMap
+      if (survivors.isEmpty) Map.empty
       else {
         val seg = f"vectors/seg-${v0 + 1}%09d"
         writeSegment(survivors, dir, seg)
-        Map("vectors" -> Seq(seg)) ++
-          entries.get(IndexManifests.TxnFrame)
-            .map(IndexManifests.TxnFrame -> _).toMap
+        Map("vectors" -> Seq(seg))
       }
-    IndexManifests.commit(spark, dir, v0 + 1, fresh)
+    IndexManifests.commit(spark, dir, v0 + 1,
+      fresh ++ IndexManifests.ledgerOf(entries))
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }
@@ -249,23 +233,10 @@ object SemanticIndex {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "d"): Long = {
-    val (v0, entries, _) =
+    val (v0, entries, ranges) =
       IndexManifests.requireLatestFull(spark, dir, "semantic")
-    val incoming = ids.select(col(idCol).as("d")).distinct()
-    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
-      .fold(incoming)(t =>
-        incoming.join(t.select("d"), Seq("d"), "left_anti"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nNew = newIds.count()
-      if (nNew == 0) return 0L
-      val seg = f"tombstones/seg-${v0 + 1}%09d"
-      newIds.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/$seg")
-      IndexManifests.commit(spark, dir, v0 + 1, entries +
-        ("tombstones" -> (entries.getOrElse("tombstones", Nil) :+ seg)))
-      nNew
-    } finally newIds.unpersist(blocking = false): Unit
+    IndexManifests.appendTombstones(spark, dir, v0, entries, ranges,
+      ids.select(col(idCol).as("d")).distinct(), "d")
   }
 
   /** Union of the live segments' cluster-partitioned scans —

@@ -235,12 +235,8 @@ object SubstrIndex {
     if (prev.isEmpty)
       Seq((k, hashed)).toDF("k", "hashed")
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/meta")
-    // the applied-batch ledger survives a same-geometry rebuild, like
-    // compact's carry-forward: dropping it would let a stream replay
-    // re-apply its last batch against the rebuilt corpus
     val entries = Map("grams" -> Seq(seg)) ++
-      prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-        .map(IndexManifests.TxnFrame -> _).toMap
+      IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
     IndexManifests.commit(spark, dir, v, entries, ranges)
     IndexManifests.vacuum(spark, dir, Frames)
   }
@@ -254,17 +250,8 @@ object SubstrIndex {
     * streaming ingest. `numFiles` defaults to 1 — micro-batches are
     * small and each appended file still records its own range.
     *
-    * `autoCompactFanout` is the INGEST-SIDE maintenance guard
-    * (r14 verdict #5, re-policied per r15 verdict #1): when > 0, a
-    * SIZE-TIERED minor compaction ([[compactTier]]) runs after the
-    * commit whenever a size tier holds `autoCompactFanout` segments —
-    * per-trigger merge work is bounded by the TIER (fanout
-    * micro-batch-sized segments, usually), never the whole index, and
-    * the live segment count (with it the per-batch range-probe size
-    * and read fan-in) stays O(fanout · log N) with no operator in the
-    * loop. Replay safety is preserved: the minor merge carries the txn
-    * ledger forward, so a crash between the append commit and the
-    * auto-compact replays into a no-op.
+    * `autoCompactFanout` (0 = off) runs [[compactTier]] with that
+    * fanout after the commit — the ingest-side maintenance guard.
     */
   def append(batch: DataFrame, idCol: String, textCol: String,
       dir: String, txn: Option[(String, Long)] = None,
@@ -312,8 +299,7 @@ object SubstrIndex {
       : Option[PreparedAppend] = {
     val (v0, entries, ranges) =
       IndexManifests.requireLatestFull(spark, dir, "substr")
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return None
+    if (IndexManifests.txnApplied(entries, txn)) return None
     val seg = f"grams/seg-${v0 + 1}%09d"
     val segRanges = staticClusteredPartials(positioned, idCol,
         numFiles) match {
@@ -339,103 +325,46 @@ object SubstrIndex {
   private[graft] def commitAppend(spark: SparkSession, dir: String,
       p: PreparedAppend, txn: Option[(String, Long)],
       autoCompactFanout: Int): Unit = {
-    val newSegs = p.entries.getOrElse("grams", Nil) :+ p.seg
-    val withSeg = p.entries + ("grams" -> newSegs)
-    IndexManifests.commit(spark, dir, p.nextVersion,
-      txn.fold(withSeg) { case (sid, b) =>
-        IndexManifests.withTxn(withSeg, sid, b) },
-      p.ranges ++ p.segRanges)
+    IndexManifests.commitAppend(spark, dir, p.nextVersion, p.entries,
+      Seq("grams" -> p.seg), txn, p.ranges ++ p.segRanges)
     if (autoCompactFanout > 0)
       compactTier(spark, dir, autoCompactFanout): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the auto policy
-    * behind `autoCompactFanout`): merge ONLY the first full size tier
-    * of gram segments ([[IndexManifests.pickTier]] — `fanout` segments
-    * within 4× of each other, smallest tier first) into one tier-up
-    * range-clustered segment, leaving every other segment untouched.
-    * Per-trigger work is bounded by the tier's bytes (fanout
-    * micro-batch segments at tier 0), never the index — the classic
-    * LSM merge ladder, vs the old threshold→[[compact]] policy's
-    * O(index) inline merge every ~threshold batches (the r15
-    * `streaming_ann_ingest` stall). No tier full → no-op. A now-full
-    * HIGHER tier is deliberately left for the NEXT append's trigger —
-    * cascading inside one micro-batch would re-concentrate the
-    * latency spike the ladder exists to spread. The txn ledger and all
-    * other frames carry through; merged-away files' `#range=` stats
-    * drop and the tier-up segment commits fresh ones, so file pruning
-    * never consults a dead file. [[compact]] remains the manual FULL
-    * (major) compaction. Returns true when a tier merged.
+  /** Merge posting partials into `numFiles` range-clustered files —
+    * the [[clusteredPartials]] one-exchange shape over (g, n, d, p)
+    * rows: range-partition first, merge inside the partitions (sum n,
+    * min (d, p)).
     */
-  def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean =
-    prepareCompactTier(spark, dir, fanout) match {
-      case None => false
-      case Some(p) => commitPreparedTier(spark, dir, p, retainVersions)
-    }
-
-  /** Phase 1 of the two-phase [[compactTier]] (r17 — the
-    * [[prepareAppend]] split applied to compaction, mirroring
-    * [[AnnIndex.prepareCompactTier]]): pick the first full size tier
-    * and WRITE the merged tier-up segment (plus its `#range=` stats)
-    * without committing — invisible until [[commitPreparedTier]], so
-    * a streaming ingest can run the heavy merge OFF the micro-batch
-    * path, concurrent with later batches, and fold it in with one
-    * cheap manifest write on the batch thread. `tier-` name, so a
-    * concurrent append's `seg-` write can never collide; a dropped
-    * prepare leaves orphan files for [[compact]]/vacuum to sweep.
-    */
-  private[graft] final case class PreparedTier(picked: Seq[String],
-      seg: String, segRanges: Map[String, (String, String)])
-
-  private[graft] def prepareCompactTier(spark: SparkSession, dir: String,
-      fanout: Int = 8): Option[PreparedTier] = {
-    val (v0, entries, _) =
-      IndexManifests.requireLatestFull(spark, dir, "substr")
-    val segs = entries.getOrElse("grams", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, segs)
-    val picked = IndexManifests.pickTier(sizes, fanout)
-    if (picked.isEmpty) return None
-    val pickedSet = picked.toSet
-    val bytes = sizes.collect { case (s, b) if pickedSet(s) => b }.sum
-    val seg = f"grams/tier-$v0%09d"
-    // same one-exchange merge shape as [[compact]], over the picked
-    // tier's partial rows only
-    val merged = ParquetRead.read(spark, picked.map(s => s"$dir/$s"): _*)
-      .repartitionByRange(IndexManifests.tierFileCount(bytes), col("g"))
+  private def mergePartials(partials: DataFrame, numFiles: Int)
+      : DataFrame =
+    partials.repartitionByRange(numFiles, col("g"))
       .groupBy(col("g"))
       .agg(sum(col("n")).as("n"),
         min(struct(col("d"), col("p"))).as("__c"))
       .select(col("g"), col("n"), col("__c.d").as("d"),
         col("__c.p").as("p"))
       .sortWithinPartitions(col("g"))
-    Some(PreparedTier(picked, seg, writeSegment(merged, dir, seg)))
-  }
 
-  /** Phase 2: swap the prepared tier into the CURRENT manifest (which
-    * may have gained appended segments — and their ranges — since
-    * phase 1; appends only add, so the picked segments are still
-    * live). Bails out without committing if any picked segment
-    * vanished (a concurrent major [[compact]]). Must run on the single
-    * writer thread. Merged-away files' `#range=` stats drop and the
-    * tier-up segment commits the fresh ones, so file pruning never
-    * consults a dead file — exactly the single-phase fold's contract.
+  /** The `grams/` tier fold ([[IndexManifests.TierFold]]): the merge
+    * body sums the picked segments' partials into one tier-up segment
+    * and returns its `#range=` stats.
     */
-  private[graft] def commitPreparedTier(spark: SparkSession, dir: String,
-      p: PreparedTier, retainVersions: Int = 1): Boolean = {
-    val (v1, entries, ranges) =
-      IndexManifests.requireLatestFull(spark, dir, "substr")
-    val segs = entries.getOrElse("grams", Nil)
-    if (!p.picked.forall(segs.contains)) return false
-    val pickedSet = p.picked.toSet
-    val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedSet)
-    IndexManifests.commit(spark, dir, v1 + 1,
-      entries + ("grams" -> (segs.filterNot(pickedSet) :+ p.seg)),
-      keptRanges ++ p.segRanges)
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+  private[graft] val Tier = IndexManifests.TierFold("substr", "grams",
+    Nil, Frames, (spark, dir, p) =>
+      writeSegment(mergePartials(ParquetRead.read(spark,
+        p.picked("grams").map(s => s"$dir/$s"): _*), p.files),
+        dir, p.out("grams")))
+
+  /** Fold the first full size tier of gram segments into one tier-up
+    * segment — the shared [[IndexManifests.compactTier]] lifecycle
+    * over [[Tier]], the policy behind `autoCompactFanout`; a now-full
+    * higher tier waits for the next trigger. [[compact]] stays the
+    * manual full merge. Returns true when a tier merged.
+    */
+  def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
+      retainVersions: Int = 1): Boolean =
+    IndexManifests.compactTier(spark, dir, Tier, fanout, retainVersions)
 
   /** Streaming ingest fast path: append a CLEANED batch's grams
     * REUSING the raw batch's pinned positioned grams for every doc the
@@ -536,21 +465,11 @@ object SubstrIndex {
     val segs = entries.getOrElse("grams", Nil)
     require(segs.nonEmpty, s"no committed gram segments at $dir")
     val seg = f"grams/seg-${v0 + 1}%09d"
-    // same one-exchange shape as clusteredPartials, over the (g,n,d,p)
-    // partial rows: range-partition first, merge inside the partitions
-    val merged = ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*)
-      .repartitionByRange(numFiles, col("g"))
-      .groupBy(col("g"))
-      .agg(sum(col("n")).as("n"),
-        min(struct(col("d"), col("p"))).as("__c"))
-      .select(col("g"), col("n"), col("__c.d").as("d"),
-        col("__c.p").as("p"))
-      .sortWithinPartitions(col("g"))
-    val ranges = writeSegment(merged, dir, seg)
-    val fresh = Map("grams" -> Seq(seg)) ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v0 + 1, fresh, ranges)
+    val ranges = writeSegment(mergePartials(
+      ParquetRead.read(spark, segs.map(s => s"$dir/$s"): _*), numFiles),
+      dir, seg)
+    IndexManifests.commit(spark, dir, v0 + 1,
+      Map("grams" -> Seq(seg)) ++ IndexManifests.ledgerOf(entries), ranges)
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }

@@ -109,7 +109,7 @@ object AnnIngest {
     // ASYNC tier folding (r17, VERDICT r16 #6 — the max_batch spike was
     // the batch that drew the tier merge; guide §2.6, overlap
     // independent jobs): see [[TierFolder]]
-    val folder = new TierFolder[AnnIndex.PreparedTier]("ann",
+    val folder = new TierFolder("ann", AnnIndex.Tier, indexDir,
       curated.sparkSession)
     LocalFs.install(curated.sparkSession)
     folder.boundTo(curated
@@ -127,14 +127,12 @@ object AnnIngest {
         if (sinkGate()) {
           val spark = df.sparkSession
           // harvest a finished background merge first: one manifest write
-          folder.harvest(p =>
-            AnnIndex.commitPreparedTier(spark, indexDir, p): Unit)
+          folder.harvest(spark)
           AnnIndex.appendIvfPq(spark, indexDir, df, idCol,
             "embedding", codebooks = Some(codebooks),
             txn = Some((streamId, batchId)), autoCompactFanout = 0)
           if (autoCompactFanout > 0)
-            folder.submitIfIdle(AnnIndex.prepareCompactTier(spark,
-              indexDir, autoCompactFanout))
+            folder.submitIfIdle(spark, autoCompactFanout)
         }
       }
       .start())

@@ -149,7 +149,7 @@ object SubstrIngest {
       sinkGate: () => Boolean = () => true,
       autoCompactFanout: Int = 8): StreamingQuery = {
     val streamId = AnnIngest.streamIdOf("substr", checkpointDir)
-    val folder = new TierFolder[SubstrIndex.PreparedTier]("substr",
+    val folder = new TierFolder("substr", SubstrIndex.Tier, indexDir,
       curated.sparkSession)
     LocalFs.install(curated.sparkSession)
     folder.boundTo(curated
@@ -162,14 +162,12 @@ object SubstrIngest {
         if (sinkGate()) {
           val spark = df.sparkSession
           // harvest a finished background merge first: one manifest write
-          folder.harvest(p =>
-            SubstrIndex.commitPreparedTier(spark, indexDir, p): Unit)
+          folder.harvest(spark)
           applyBatch(spark, indexDir, outDir, df, idCol,
             textCol, streamId, batchId, minSpanTokens,
             autoCompactFanout = 0): Unit
           if (autoCompactFanout > 0)
-            folder.submitIfIdle(SubstrIndex.prepareCompactTier(spark,
-              indexDir, autoCompactFanout))
+            folder.submitIfIdle(spark, autoCompactFanout)
         }
       }
       .start())

@@ -10,12 +10,15 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.slf4j.LoggerFactory
 
-/** An ingest stream's background tier fold (r17, [[AnnIngest.start]]):
-  * the heavy half of a fold — read the tier, rewrite one tier-up segment,
-  * invisible until committed — runs on one daemon thread concurrently
-  * with later micro-batches, and the batch thread only pays the cheap
-  * manifest swap once the merge is ready. The manifest writer stays the
-  * batch thread, so the put-if-absent commit never races.
+import graft.extra.IndexManifests
+import graft.extra.IndexManifests.PreparedTier
+
+/** An ingest stream's background tier fold: the shared
+  * [[IndexManifests.prepareTier]] of its index's fold runs on one daemon
+  * thread (`graft-<kind>-tier-fold`) concurrently with later
+  * micro-batches, and the batch thread pays only the cheap
+  * [[IndexManifests.commitTier]] once the merge is ready — the writer
+  * stays the batch thread, so the put-if-absent commit never races.
   *
   * The thread lives as long as its query: [[boundTo]] shuts it down and
   * cancels a pending fold, with its Spark jobs, when the query
@@ -23,23 +26,24 @@ import org.slf4j.LoggerFactory
   * compact/vacuum to sweep; a fold dropped because its prepare failed
   * is logged at WARN with the cause, and the next fold starts afresh.
   */
-private[streaming] final class TierFolder[P](kind: String,
-    spark: SparkSession) {
+private[streaming] final class TierFolder(kind: String,
+    tier: IndexManifests.TierFold, dir: String, spark: SparkSession) {
   private val sc = spark.sparkContext
   private val jobTag = s"graft-$kind-tier-fold-${UUID.randomUUID}"
   private val pool = Executors.newSingleThreadExecutor(r => {
     val t = new Thread(r, s"graft-$kind-tier-fold"); t.setDaemon(true); t
   })
-  private val pending = new AtomicReference[Future[Option[P]]]()
-  private val log = LoggerFactory.getLogger(classOf[TierFolder[_]])
+  private val pending = new AtomicReference[Future[Option[PreparedTier]]]()
+  private val log = LoggerFactory.getLogger(classOf[TierFolder])
 
-  /** Commit a finished background merge; a failed prepare is logged and
-    * dropped. */
-  def harvest(commit: P => Unit): Unit = {
+  /** Commit a finished background merge through `batch` (the
+    * micro-batch's session); a failed prepare is logged and dropped. */
+  def harvest(batch: SparkSession): Unit = {
     val f = pending.get()
     if (f != null && f.isDone) {
       pending.set(null)
-      try f.get().foreach(commit)
+      try f.get().foreach(p =>
+        IndexManifests.commitTier(batch, dir, tier, p): Unit)
       catch { case e: ExecutionException =>
         log.warn(s"$kind tier fold dropped, its prepare failed: " +
           e.getCause, e.getCause)
@@ -47,11 +51,15 @@ private[streaming] final class TierFolder[P](kind: String,
     }
   }
 
-  /** Start `prepare` in the background unless a fold is already pending. */
-  def submitIfIdle(prepare: => Option[P]): Unit =
+  /** Start a `fanout` prepare through `batch` in the background unless
+    * a fold is already pending. */
+  def submitIfIdle(batch: SparkSession, fanout: Int): Unit =
     if (pending.get() == null)
-      pending.set(pool.submit(new Callable[Option[P]] {
-        def call(): Option[P] = { sc.addJobTag(jobTag); prepare }
+      pending.set(pool.submit(new Callable[Option[PreparedTier]] {
+        def call(): Option[PreparedTier] = {
+          sc.addJobTag(jobTag)
+          IndexManifests.prepareTier(batch, dir, tier, fanout)
+        }
       }))
 
   private def shutdown(): Unit = {

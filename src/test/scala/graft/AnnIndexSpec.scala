@@ -226,6 +226,29 @@ class AnnIndexSpec extends SparkSpec {
     assert(searchRows(AnnIndex.readIvfPq(spark, dir)) == deleted)
   }
 
+  test("delete commits nothing when no id is new: re-deleting the same " +
+      "ids, or deleting none, leaves the head version and the " +
+      "tombstones/ files unchanged") {
+    val emb = graft.model.Tables.load(spark, sfDir, "embeddings")
+    val dir = tmpDir()
+    AnnIndex.buildAndWriteIvfPq(emb, "vec_id", "embedding", dir,
+      numCentroids = 8, m = 8, pqCentroids = 8)
+    def head() = graft.extra.IndexManifests.latest(spark, dir).get._1
+    def tombFiles(): Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(s"$dir/tombstones")).map(_.getPath).toSet
+    }
+    val victims = Seq(3L, 7L).toDF("vec_id")
+    AnnIndex.delete(spark, dir, victims, "vec_id")
+    val (v, files) = (head(), tombFiles())
+    assert(files.exists(_.endsWith(".parquet")))
+    AnnIndex.delete(spark, dir, victims, "vec_id")
+    assert(head() == v && tombFiles() == files)
+    AnnIndex.delete(spark, dir, Seq.empty[Long].toDF("vec_id"), "vec_id")
+    assert(head() == v && tombFiles() == files)
+  }
+
   private def codeFileCount(dir: String): Int = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)

@@ -514,20 +514,64 @@ class PlanShapeSpec extends SparkSpec {
     * construction, which plans as `BroadcastNestedLoopJoin BuildRight,
     * Cross`. This guard keeps the original property — no ACCIDENTAL
     * all-pairs join — while admitting exactly that shape: every
-    * nested-loop occurrence must be the broadcast-build cross form,
-    * and the plan set must actually carry the consts columns (so a
-    * real accidental cross can't hide behind the allowance).
+    * nested-loop join must be the broadcast-build cross form AND its
+    * own build side must carry the consts columns, so an accidental
+    * cross elsewhere in the plan can't hide behind the one legitimate
+    * consts join.
     */
   private def assertOnlyConstsNestedLoop(plans: String): Unit = {
-    val bnlj = plans.linesIterator
-      .filter(_.contains("BroadcastNestedLoopJoin")).toSeq
-    if (bnlj.nonEmpty) {
-      assert(plans.contains("__ndocs"),
-        s"nested loop without the consts frame:\n${bnlj.mkString("\n")}")
-      assert(bnlj.forall(l => l.contains("BuildRight, Cross") ||
-          l.contains("BuildLeft, Cross")),
-        s"non-consts nested loop shape:\n${bnlj.mkString("\n")}")
+    val lines = plans.linesIterator.toIndexedSeq
+    // tree depth of a plan line: one per 3-char ancestor column, plus
+    // one for the `+- `/`:- ` child marker
+    val Tree = """^((?:[ :|]  )*)([+:]- )?.*$""".r
+    def depth(l: String): Int = l match {
+      case Tree(cols, marker) => cols.length / 3 + (if (marker != null) 1 else 0)
+      case _ => 0
     }
+    def subtree(i: Int): Seq[String] = {
+      val d = depth(lines(i))
+      lines(i) +: lines.drop(i + 1).takeWhile(depth(_) > d)
+    }
+    for ((l, i) <- lines.zipWithIndex if l.contains("BroadcastNestedLoopJoin")) {
+      assert(l.contains("BuildRight, Cross") || l.contains("BuildLeft, Cross"),
+        s"non-consts nested loop shape:\n$l")
+      // the build side is the last child (`+- `) for BuildRight, the
+      // first (`:- `) for BuildLeft
+      val marker = if (l.contains("BuildRight")) "+- " else ":- "
+      val d = depth(l)
+      val build = (i + 1 until lines.size)
+        .takeWhile(j => depth(lines(j)) > d)
+        .find(j => depth(lines(j)) == d + 1 &&
+          lines(j).drop(3 * d).startsWith(marker))
+      assert(build.exists(j => subtree(j).exists(t =>
+          t.contains("__ndocs") || t.contains("__avgdl"))),
+        s"nested loop whose build side is not the consts frame:\n" +
+          subtree(i).mkString("\n").take(2000))
+    }
+  }
+
+  test("the consts nested-loop allowance is per join: a cross join " +
+      "elsewhere in a plan that also holds the consts join is rejected") {
+    val consts = """   +- BroadcastExchange IdentityBroadcastMode, [plan_id=9]
+                   |      +- *(2) HashAggregate(keys=[], functions=[count(1)], output=[__ndocs#11L, __avgdl#12])
+                   |         +- LocalTableScan [dl#5L]""".stripMargin
+    val ok = """*(3) Project [doc_id#1L, tf#3L, __ndocs#11L]
+               |+- *(3) BroadcastNestedLoopJoin BuildRight, Cross
+               |   :- *(3) Project [doc_id#1L, tf#3L]
+               |   :  +- FileScan parquet [doc_id#1L,tf#3L]
+               |""".stripMargin + consts
+    assertOnlyConstsNestedLoop(ok)
+    val stray = """*(3) Project [doc_id#1L, term#4, __ndocs#11L]
+                  |+- *(3) BroadcastNestedLoopJoin BuildRight, Cross
+                  |   :- *(3) BroadcastNestedLoopJoin BuildRight, Cross
+                  |   :  :- *(3) Project [doc_id#1L, tf#3L]
+                  |   :  :  +- FileScan parquet [doc_id#1L,tf#3L]
+                  |   :  +- BroadcastExchange IdentityBroadcastMode, [plan_id=7]
+                  |   :     +- *(1) Project [term#4]
+                  |   :        +- FileScan parquet [term#4]
+                  |""".stripMargin + consts
+    intercept[org.scalatest.exceptions.TestFailedException](
+      assertOnlyConstsNestedLoop(stray))
   }
 
   test("recent_slice: the ts range predicate reaches the parquet scan " +
