@@ -24,6 +24,15 @@ the formatting alone.
 with that prefix was sampled (from its first to its last sample), e.g.
 `--window-of "stream execution thread"` for the life of a streaming query.
 
+Shares are of CPU samples, not of wall time. JFR samples only a few
+threads per period (JDK 17: 5 running in Java and 1 in native code), so a
+thread's samples cover only part of its busy time, and none of the time
+it waits. A streaming batch's ~47 ms before its first job, for example,
+shows as ~20 ms of samples on the stream thread. Its waits are mostly
+shorter than the `profile` setting's 10 ms `jdk.ThreadPark` threshold; to
+see them, record with that event's threshold set to 0 ms (e.g. a copy of
+`profile.jfc` with `jdk.ThreadPark#threshold=0 ms`).
+
 Record with `-XX:StartFlightRecording=filename=run.jfr,settings=profile
 -XX:FlightRecorderOptions:stackdepth=512` (e.g. through
 `JAVA_TOOL_OPTIONS`): at JFR's default depth of 64 frames the roots of
@@ -50,6 +59,8 @@ DEFAULT_PATHS = [
     r"foreachBatch=ForeachBatchSink\.addBatch",
     r"file-committer=FileOutputCommitter\.|HadoopMapReduceCommitProtocol\.",
     r"process-fork=ProcessBuilder\.start",
+    r"codegen=WholeStageCodegenExec\.doCodeGen",
+    r"closure-clean=SparkClosureCleaner\.clean",
 ]
 UUID = re.compile(r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
                   r"[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")

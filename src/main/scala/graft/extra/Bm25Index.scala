@@ -114,15 +114,8 @@ object Bm25Index {
       }
       lo < sorted.size && sorted(lo) <= mx
     }
-    val segSet = segs.toSet
-    val liveRanged = ranges.toSeq.filter { case (f, _) =>
-      val i = f.lastIndexOf('/')
-      i > 0 && segSet.contains(f.substring(0, i))
-    }
-    val rangedSegs = liveRanged.map { case (f, _) =>
-      f.substring(0, f.lastIndexOf('/'))
-    }.toSet
-    val legacy = segs.filterNot(rangedSegs.contains).map(s => s"$dir/$s")
+    val (liveRanged, legacySegs) = IndexManifests.splitRanged(segs, ranges)
+    val legacy = legacySegs.map(s => s"$dir/$s")
     val kept = liveRanged.collect {
       case (f, rng) if rng == IndexManifests.UnknownFileRange =>
         s"$dir/$f" // stats suppressed: conservatively keep

@@ -380,15 +380,7 @@ private[graft] object IndexManifests {
       : (Seq[String], Int) = {
     val segs = entries.getOrElse(frame, Nil)
     require(segs.nonEmpty, s"no committed $frame segments at $dir")
-    val segSet = segs.toSet
-    val liveRanged = ranges.toSeq.filter { case (f, _) =>
-      val i = f.lastIndexOf('/')
-      i > 0 && segSet.contains(f.substring(0, i))
-    }
-    val rangedSegs = liveRanged.map { case (f, _) =>
-      f.substring(0, f.lastIndexOf('/'))
-    }.toSet
-    val legacySegs = segs.filterNot(rangedSegs.contains)
+    val (liveRanged, legacySegs) = splitRanged(segs, ranges)
     val total = liveRanged.size + legacySegs.size
     if (total <= skipProbeBelow)
       return (liveRanged.map { case (f, _) => s"$dir/$f" } ++
@@ -404,6 +396,26 @@ private[graft] object IndexManifests {
       Merge.pruneRanged(spark, ranged, keyType, batchKeys, key)
     (selected ++ legacySegs.map(s => s"$dir/$s"),
       liveRanged.size + legacySegs.size)
+  }
+
+  /** Splits live segments `segs` by how a range probe may prune them:
+    * the files of `ranges` (segment-relative `seg/file` → [min, max],
+    * or [[UnknownFileRange]]) whose segment is live, and the live
+    * segments committed before range stats existed, which read whole.
+    * Stats of segments no longer live are dropped.
+    */
+  private[graft] def splitRanged(segs: Seq[String],
+      ranges: Map[String, (String, String)])
+      : (Seq[(String, (String, String))], Seq[String]) = {
+    val segSet = segs.toSet
+    val liveRanged = ranges.toSeq.filter { case (f, _) =>
+      val i = f.lastIndexOf('/')
+      i > 0 && segSet.contains(f.substring(0, i))
+    }
+    val rangedSegs = liveRanged.map { case (f, _) =>
+      f.substring(0, f.lastIndexOf('/'))
+    }.toSet
+    (liveRanged, segs.filterNot(rangedSegs.contains))
   }
 
   /** On-disk byte size of each manifest-named segment — one driver

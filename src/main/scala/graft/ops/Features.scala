@@ -1,7 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+import org.apache.spark.sql.catalyst.analysis.{AnalysisErrorAt,
+  TypeCheckResult}
+import org.apache.spark.sql.catalyst.expressions.{KnownNullable, Literal,
+  PreciseTimestampConversion, TimeWindow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, MetadataBuilder}
 
 /** Sliding-window per-key feature computation — the reference engine's
   * flagship operator (reference src/consumer/spark_streaming.py:73-118).
@@ -18,18 +24,22 @@ import org.apache.spark.sql.functions._
   *
   * Determinism note (SURVEY.md §4.3): the reference uses `first(price)`,
   * which is partition-order dependent. This engine uses `min_by`/`max_by`
-  * on the event time — same semantics when data is time-ordered, but
-  * deterministic and oracle-checkable. The reference-faithful variant is
-  * kept as [[Features.computeArrivalOrder]].
+  * on the event time — same semantics when data is time-ordered, and
+  * deterministic and oracle-checkable as long as no two ticks of one
+  * (key, window) share an event time. On such a tie the row the
+  * aggregation sees first wins, which depends on partition order again.
+  * The reference-faithful variant is kept as
+  * [[Features.computeArrivalOrder]].
   *
   * Scale notes (100 TB posture):
   *   - One shuffle, keyed by (window, key): Spark plans partial (map-side)
   *     aggregation before the exchange, so pre-shuffle data is one row per
   *     (window, key) per task — the shuffle is proportional to group count,
   *     not row count.
-  *   - Sliding windows replicate each row W/S times *after* the partial agg
-  *     projection (only the 3 needed columns survive the scan), so the
-  *     expansion cost is bounded and parallel.
+  *   - Sliding windows replicate each row ceil(W/S) times *before* the
+  *     partial agg (only the 3 needed columns survive the scan), so the
+  *     expansion cost is bounded and parallel. The window column is built
+  *     here, not by Spark's `window()`: see [[withWindow]].
   *   - No driver-side collection anywhere; output is a distributed frame.
   */
 object Features {
@@ -73,12 +83,8 @@ object Features {
     val t = col(cfg.timeCol)
     val v = col(cfg.valueCol)
     val base = cfg.watermark.fold(df)(w => df.withWatermark(cfg.timeCol, w))
-    val win = cfg.slide match {
-      case Some(s) => window(t, cfg.window, s)
-      case None    => window(t, cfg.window)
-    }
-    base
-      .groupBy(win.as("window"), col(cfg.keyCol))
+    withWindow(base, cfg)
+      .groupBy(col("window"), col(cfg.keyCol))
       .agg(
         firstAgg(v, t).as("first_price"),
         lastAgg(v, t).as("last_price"),
@@ -114,18 +120,13 @@ object Features {
       cfg: FeatureConfig = FeatureConfig()): DataFrame = {
     val byKey = org.apache.spark.sql.expressions.Window
       .partitionBy(cfg.keyCol).orderBy(cfg.timeCol)
-    val t = col(cfg.timeCol)
     // same positive-price guard as the log_return in computeWith
     val prev = lag(col(cfg.valueCol), 1).over(byKey)
     val withRet = df.withColumn("tick_return",
       when(col(cfg.valueCol) > 0 && prev > 0,
         log(col(cfg.valueCol) / prev)))
-    val win = cfg.slide match {
-      case Some(s) => window(t, cfg.window, s)
-      case None    => window(t, cfg.window)
-    }
-    withRet
-      .groupBy(win.as("window"), col(cfg.keyCol))
+    withWindow(withRet, cfg)
+      .groupBy(col("window"), col(cfg.keyCol))
       .agg(
         stddev_samp(col("tick_return")).as("volatility_true"),
         count(col(cfg.valueCol)).as("num_ticks"))
@@ -134,5 +135,49 @@ object Features {
         col("window.start").as("window_start"),
         col("window.end").as("window_end"),
         col("volatility_true"), col("num_ticks"))
+  }
+
+  /** `df` with the `window` struct column of `window(t, W, S)` added, one
+    * row per window that holds the row's event time, and rows without an
+    * event time dropped — what Spark's `TimeWindowing` rule builds, minus
+    * its `Expand`. That rule projects every row ceil(W/S) times, each
+    * projection re-deriving the slot from scratch (~40 expression nodes
+    * apiece); here the slot `t - pmod(t, S)` is computed once and the
+    * window starts are an `explode` of constant offsets from it. The
+    * start ≤ t < end filter is only needed when S does not divide W.
+    *
+    * The column keeps the time column's metadata (so a watermark's
+    * `spark.watermarkDelayMs` rides along and the stateful aggregate
+    * still evicts on `window.end`) plus Spark's time-window marker, and
+    * W and S are parsed and checked as `window()` does, raising the same
+    * analysis errors.
+    */
+  private def withWindow(df: DataFrame, cfg: FeatureConfig): DataFrame = {
+    val time = df.schema(cfg.timeCol)
+    val spec = TimeWindow(Literal(0L, time.dataType), cfg.window,
+      cfg.slide.getOrElse(cfg.window), "0 seconds")
+    spec.checkInputDataTypes() match {
+      case m: TypeCheckResult.DataTypeMismatch => spec.dataTypeMismatch(spec, m)
+      case _ =>
+    }
+    val (w, s) = (spec.windowDuration, spec.slideDuration)
+    val us = column(PreciseTimestampConversion(
+      expression(col(cfg.timeCol)), time.dataType, LongType))
+    def timestamp(c: Column) = column(KnownNullable(
+      PreciseTimestampConversion(expression(c), LongType, time.dataType)))
+    val n = math.ceil(w * 1.0 / s).toInt
+    val startUs = col("__window_start_us")
+    // the last window's start (the slot), then the earlier starts
+    val slotted = df.where(col(cfg.timeCol).isNotNull)
+      .withColumn("__window_start_us", us - pmod(us, lit(s)))
+    val starts = if (n == 1) slotted else slotted.withColumn(
+      "__window_start_us", explode(array(startUs +:
+        (1 until n).map(k => startUs - lit(k * s)): _*)))
+    val kept = if (w % s == 0) starts else starts.where(us < startUs + lit(w))
+    val metadata = new MetadataBuilder().withMetadata(time.metadata)
+      .putBoolean(TimeWindow.marker, true).build()
+    kept.select(col("*"), struct(timestamp(startUs).as("start"),
+        timestamp(startUs + lit(w)).as("end")).as("window", metadata))
+      .drop(startUs)
   }
 }

@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftStreamBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.execution.{ExpandExec, GenerateExec}
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.gen.TickGen
 import graft.ops.{Features, TickParse}
-import graft.streaming.{FileTickSource, MemoryTickSource, RateTickSource,
-  StreamingPipeline}
+import graft.streaming.{FeatureSink, FileTickSource, MemoryTickSource,
+  RateTickSource, StreamingPipeline}
 import graft.streaming.StreamingPipeline.Config
 import graft.util.LocalFs
 
@@ -221,12 +225,30 @@ class StreamingSpec extends SparkSpec {
       s"processes named the committer's files, e.g. ${committer.take(3)}")
   }
 
+  /** Starts a feature stream over the JSON-lines files of a directory. */
+  private type Start = (String, Config) => StreamingQuery
+
+  private def pipelineOn(s: SparkSession): Start = (in, c) =>
+    StreamingPipeline.start(s, new FileTickSource(in), c,
+      trigger = Trigger.ProcessingTime(0))
+
+  /** The pipeline as it was before windows were assigned by slot and
+    * offset: the same sink over Spark's `window()` aggregation plan. */
+  private val windowPlan: Start = (in, c) => {
+    LocalFs.install(spark)
+    GraftStreamBridge.start(
+      FeaturesSpec.windowFeatures(
+        TickParse.parseRaw(new FileTickSource(in).stream(spark)),
+        StreamingPipeline.featureConfig(c)),
+      new FeatureSink(spark, c.outDir, () => true), c.checkpointDir,
+      OutputMode.Update(), Trigger.ProcessingTime(0))
+  }
+
   /** Write a checkpoint under `first`, restart it under `second`: the
-    * offsets, commits and state written by one `file:` binding must
+    * offsets, commits and state written by one (file binding, plan) must
     * carry the other through to the same finalized features.
     */
-  private def restartAcross(first: SparkSession,
-      second: SparkSession): Unit = {
+  private def restartAcross(first: Start, second: Start): Unit = {
     val in = tmp("in"); val out = tmp("out"); val ckpt = tmp("ckpt")
     val c = cfg.copy(checkpointDir = ckpt, outDir = out)
     val files = Seq(
@@ -237,9 +259,8 @@ class StreamingSpec extends SparkSpec {
       files(i).map(p =>
         "{\"value\":\"" + p.replace("\"", "\\\"") + "\"}").mkString("\n")
         .getBytes("UTF-8")): Unit
-    def run(s: SparkSession): Unit = {
-      val q = StreamingPipeline.start(s, new FileTickSource(in), c,
-        trigger = Trigger.ProcessingTime(0))
+    def run(start: Start): Unit = {
+      val q = start(in, c)
       try q.processAllAvailable() finally q.stop()
     }
     def sink = spark.read.parquet(out)
@@ -250,8 +271,9 @@ class StreamingSpec extends SparkSpec {
     // the second run resumed: batch ids continue, nothing replayed
     assert(sink.filter(col("batch_id") <= lastBatch).count() == firstRows)
     assert(sink.count() > firstRows)
-    val cols = Seq("symbol", "window_start", "first_price", "last_price",
-      "num_ticks").map(col)
+    val cols = Seq("symbol", "window_start", "window_end", "first_price",
+      "last_price", "log_return", "volatility", "num_ticks",
+      "max_event_time").map(col)
     val streamed = StreamingPipeline.finalized(spark, out).select(cols: _*)
       .orderBy("symbol", "window_start").collect().toSeq
     val batch = Features.compute(
@@ -270,14 +292,61 @@ class StreamingSpec extends SparkSpec {
   test("a checkpoint written with the fork-free binding restarts under " +
       "stock LocalFs") {
     val stock = stockSession()
-    restartAcross(spark, stock)
+    restartAcross(pipelineOn(spark), pipelineOn(stock))
     assert(stock.conf.get(LocalFs.Key) == "org.apache.hadoop.fs.local.LocalFs")
     assert(spark.conf.get(LocalFs.Key) == classOf[LocalFs].getName)
   }
 
   test("a checkpoint written under stock LocalFs restarts with the " +
       "fork-free binding") {
-    restartAcross(stockSession(), spark)
+    restartAcross(pipelineOn(stockSession()), pipelineOn(spark))
+  }
+
+  test("a data batch assigns windows by explode, not Expand, and the " +
+      "window key carries the watermark delay") {
+    val src = new MemoryTickSource(spark)
+    val q = StreamingPipeline.start(spark, src,
+      cfg.copy(checkpointDir = tmp("ckpt"), outDir = tmp("out")),
+      trigger = Trigger.ProcessingTime(0))
+    // event times under the lateness keep the watermark at 0, so no
+    // no-data batch follows and the last execution is the data batch
+    src.addData(Seq(payload("AAPL", 100.0, 30000L),
+      payload("MSFT", 400.0, 35000L)))
+    q.processAllAvailable(); q.stop()
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan
+    assert(plan.collect { case e: ExpandExec => e }.isEmpty, plan)
+    // the JSON parse's explode and the window assignment's
+    assert(plan.collect { case g: GenerateExec => g }.size == 2, plan)
+    val keys = plan.collect { case s: StateStoreSaveExec => s.keyExpressions }
+    assert(keys.size == 1, plan)
+    val window = keys.head.find(_.name == "window").get
+    assert(window.metadata.getLong(EventTimeWatermark.delayKey) == 60000L)
+  }
+
+  test("state rows are evicted once the watermark passes their windows") {
+    val src = new MemoryTickSource(spark)
+    val q = StreamingPipeline.start(spark, src,
+      cfg.copy(checkpointDir = tmp("ckpt"), outDir = tmp("out")),
+      trigger = Trigger.ProcessingTime(0))
+    // 7 AAPL windows (starts 10..70 s) + 6 MSFT windows (10..60 s)
+    src.addData(Seq(payload("AAPL", 100.0, 61000L),
+      payload("AAPL", 101.0, 70000L), payload("MSFT", 400.0, 65000L)))
+    q.processAllAvailable()
+    // moves the watermark to 9940 s; the next batch evicts below it
+    src.addData(Seq(payload("AAPL", 102.0, 10000000L)))
+    q.processAllAvailable()
+    src.addData(Seq(payload("AAPL", 103.0, 10001000L)))
+    q.processAllAvailable(); q.stop()
+    val rows = q.recentProgress.filter(_.numInputRows > 0)
+      .map(_.stateOperators.head.numRowsTotal)
+    assert(rows.head == 13L)
+    assert(rows.last == 6L, rows.toSeq) // the six windows of t ≈ 10000 s
+  }
+
+  test("a checkpoint written by the window() plan restarts under the " +
+      "slot-and-offset plan") {
+    restartAcross(windowPlan, pipelineOn(spark))
   }
 
   test("GBM generator is deterministic under a seed") {
